@@ -167,24 +167,6 @@ def frontier_bench(spark) -> dict:
     bloom_probe_sec = time.monotonic() - tb1
     assert n_bloom == n_sched + n_def, (n_bloom, n_sched, n_def)
 
-    # cuckoo-path numbers (deletable filter; same probe protocol).
-    # m sized for the bench seen set: ~667k over 64 buckets.
-    from seo_crawler_spark.operators.cuckoo import (
-        cuckoo_build,
-        dedupe_against_seen_cuckoo,
-        size_for,
-    )
-
-    m = size_for(FRONTIER_N // 3 // 64 + 1)
-    tc0 = time.monotonic()
-    cuckoo = cuckoo_build(seen, m=m).localCheckpoint(eager=True)
-    cuckoo_build_sec = time.monotonic() - tc0
-    dedupe_against_seen_cuckoo(cand, seen, cuckoo).count()  # warm workers
-    tc1 = time.monotonic()
-    n_cuckoo = dedupe_against_seen_cuckoo(cand, seen, cuckoo).count()
-    cuckoo_probe_sec = time.monotonic() - tc1
-    assert n_cuckoo == n_sched + n_def, (n_cuckoo, n_sched, n_def)
-
     return {
         "frontier_n": FRONTIER_N,
         "frontier_scheduled": n_sched,
@@ -195,8 +177,6 @@ def frontier_bench(spark) -> dict:
         "frontier_urls_per_sec": round(FRONTIER_N / dt),
         "frontier_bloom_build_sec": round(bloom_build_sec, 3),
         "frontier_bloom_dedupe_sec": round(bloom_probe_sec, 3),
-        "frontier_cuckoo_build_sec": round(cuckoo_build_sec, 3),
-        "frontier_cuckoo_dedupe_sec": round(cuckoo_probe_sec, 3),
     }
 
 

@@ -83,7 +83,7 @@ def main() -> int:
                 crawl_external=True,
                 politeness_budget=BUDGET,
                 max_waves=MAX_WAVES,
-                use_bloom=False,  # exact anti-join: the union IS the cost
+                bloom_min_seen=None,  # exact anti-join: the union IS the cost
                 seen_fold_every=fold_every,
             ),
             state_dir=state_dir,

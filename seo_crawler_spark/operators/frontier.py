@@ -44,7 +44,6 @@ from ..functions import urls as U
 from .extract import extract_pages, explode_links
 from .ordering import ordered_seq, ordered_seq_counted
 from .politeness import politeness_tag, template_cap_tag
-from .cuckoo import cuckoo_build, cuckoo_merge, dedupe_against_seen_cuckoo
 from .seen import bloom_build, bloom_merge, dedupe_against_seen
 
 
@@ -72,19 +71,12 @@ class CrawlConfig:
     wave_seconds: float = 60.0
     salt_buckets: int = 1
     discover_sitemaps: bool = False  # reference default is True; opt-in here
-    use_bloom: bool = True
-    # bloom is a win only once the seen table dwarfs per-wave candidates;
-    # below this row count the exact anti-join is strictly faster
-    bloom_min_seen: int = 2_000_000
-    # probabilistic seen-state flavor: "bloom" (OR-mergeable bitmaps) or
-    # "cuckoo" (deletable fingerprints — recrawl/TTL eviction without a
-    # state rebuild; see operators/cuckoo.py). Same probe-then-exact-
-    # verify protocol either way; gated by use_bloom/bloom_min_seen.
-    seen_filter: str = "bloom"
-    # fixed per-bucket cuckoo cell count for one crawl (same-m tables
-    # merge losslessly; growth = rebuild from exact seen). 2^16 cells ×
-    # 4 slots × 64 buckets ≈ 14M URLs at 84% load, 32 MiB state.
-    cuckoo_m: int = 1 << 16
+    # seen-state bloom prune (probe, then exact verify of the positives)
+    # builds once the seen table reaches this many rows: it is a win only
+    # once the seen table dwarfs per-wave candidates, below that the
+    # exact anti-join is strictly faster. 0 → from the first wave;
+    # None → never (exact anti-join only).
+    bloom_min_seen: int | None = 2_000_000
     base_domain: str | None = None
     max_waves: int = 64
     # reference start_crawl: a seed URL carrying a path limits the crawl
@@ -315,10 +307,10 @@ class CrawlEngine:
 
         ``recrawl_before_wave=k`` turns the resume into a refresh crawl:
         URLs whose first crawl happened before wave k are EVICTED from
-        the seen state (the engine-level twin of cuckoo_delete — with a
-        deletable filter the long-lived probabilistic state drops the
-        same fingerprints in place; the exact table is filtered either
-        way) and re-enqueued at depth 0 with fresh (wave, seq) numbers.
+        the exact seen table (tombstoned, not rewritten; the bloom
+        filter is never persisted, each run rebuilds it from the exact
+        table, so eviction needs no filter-level delete) and
+        re-enqueued at depth 0 with fresh (wave, seq) numbers.
         Their re-fetched pages/links append as new wave rows; links they
         re-discover dedupe against the surviving seen set as usual.
         Re-fetches count against max_urls like any other fetch."""
@@ -666,17 +658,13 @@ class CrawlEngine:
                 .drop("__rn")
             )
             cand = cand.withColumn("url_hash", U.url_hash(F.col("url")))
-            if cfg.use_bloom and bloom is None and next_seq >= cfg.bloom_min_seen:
-                if cfg.seen_filter == "cuckoo":
-                    bloom = cuckoo_build(seen_df, m=cfg.cuckoo_m).localCheckpoint(
-                        eager=True
-                    )
-                else:
-                    bloom = bloom_build(seen_df).transform(local_ckpt)
-            if bloom is not None and cfg.seen_filter == "cuckoo":
-                fresh = dedupe_against_seen_cuckoo(cand, seen_df, bloom)
-            else:
-                fresh = dedupe_against_seen(cand, seen_df, bloom)
+            if (
+                bloom is None
+                and cfg.bloom_min_seen is not None
+                and next_seq >= cfg.bloom_min_seen
+            ):
+                bloom = bloom_build(seen_df).transform(local_ckpt)
+            fresh = dedupe_against_seen(cand, seen_df, bloom)
             # checkpointed + counted inside ordered_seq (no extra job)
             fresh, n_new = ordered_seq_counted(
                 fresh, ["src_seq", "anchor_pos"], seq_col="seq", start=next_seq
@@ -689,14 +677,9 @@ class CrawlEngine:
                 seen_parts.append(new_seen)
                 wave_deltas.append(new_seen)
                 if bloom is not None:
-                    if cfg.seen_filter == "cuckoo":
-                        bloom = cuckoo_merge(
-                            bloom, cuckoo_build(new_seen, m=cfg.cuckoo_m)
-                        ).transform(local_ckpt)
-                    else:
-                        bloom = bloom_merge(
-                            bloom, bloom_build(new_seen)
-                        ).transform(local_ckpt)
+                    bloom = bloom_merge(bloom, bloom_build(new_seen)).transform(
+                        local_ckpt
+                    )
                 if crawled_total < cfg.max_urls:
                     new_frontier = fresh.select(
                         "url", "url_hash", "host", "depth",

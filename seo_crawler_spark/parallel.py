@@ -24,23 +24,31 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
-try:  # propagate JVM thread-local properties (job group/description)
-    from pyspark import inheritable_thread_target as _inherit
-except ImportError:  # pragma: no cover — present since Spark 3.2
-    def _inherit(f):  # type: ignore[misc]
-        return f
+from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
+
+
+def _inherit(thunk):
+    """Wrap ``thunk`` so its driver thread inherits the caller's JVM
+    local properties (job group/description) and, given the active
+    session, its job tags. Wrapping captures them at call time, so
+    this must run on the caller's thread."""
+    session = SparkSession.getActiveSession()
+    if session is None:
+        return inheritable_thread_target(thunk)
+    return inheritable_thread_target(session)(thunk)
 
 
 def run_parallel(*thunks):
     """Run independent zero-arg callables in driver threads; return
-    their results in call order.
+    their results in call order (``[]`` for no thunks).
 
     Each thunk builds + materializes its member DataFrame (the eager
     checkpoints inside run as concurrent Spark jobs). Exceptions
     propagate from the failing member after all threads settle.
     """
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(_inherit(t)) for t in thunks]
         return [f.result() for f in futures]

@@ -22,8 +22,11 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..parallel import run_parallel
 
 
 class SnapshotStore:
@@ -117,25 +120,22 @@ class SnapshotStore:
         # scheduler interleaves their stages across the executor pool
         # instead of paying four serial rounds of plan+schedule+write
         # latency per wave. All four must complete (or raise) before
-        # the manifest commit below — .result() re-raises any failure,
-        # and a partially-written wave stays invisible (staging dirs).
-        # seen arrives as the wave's DELTA — appends stay O(new URLs)
-        # per wave instead of O(|seen|).
-        from concurrent.futures import ThreadPoolExecutor
-
-        tables = [
-            (frontier, "frontier"),
-            (seen, "seen"),
-            (pages, "pages"),
-            (links, "links"),
-        ]
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [
-                pool.submit(self._write_wave_atomic, df, name, wave)
-                for df, name in tables
-            ]
-            for f in futs:
-                f.result()
+        # on_data_written and the manifest commit below — run_parallel
+        # returns only after every thread settles and re-raises any
+        # failure, and a partially-written wave stays invisible
+        # (staging dirs). seen arrives as the wave's DELTA — appends
+        # stay O(new URLs) per wave instead of O(|seen|).
+        run_parallel(
+            *(
+                partial(self._write_wave_atomic, df, name, wave)
+                for df, name in (
+                    (frontier, "frontier"),
+                    (seen, "seen"),
+                    (pages, "pages"),
+                    (links, "links"),
+                )
+            )
+        )
         if on_data_written is not None:
             on_data_written()
 

@@ -23,7 +23,6 @@ _SHARD_COST: dict[str, float] = {
     "test_oracle_parity.py": 74.6,
     "test_frontier_engine.py": 54.4,
     "test_plan_quality.py": 40.6,
-    "test_cuckoo.py": 40.6,
     "test_simsearch_parity.py": 36.0,
     "test_connected_components.py": 25.9,
     "test_traps.py": 25.4,
@@ -72,6 +71,14 @@ def pytest_addoption(parser):
             "shard collects the full suite and computes the identical "
             "assignment — the union over i=0..N-1 is exactly the suite."
         ),
+    )
+
+
+def pytest_configure(config):
+    # a RuntimeWarning raised in package code (numpy overflow, invalid
+    # value, ...) is a bug unless the code opts in with np.errstate
+    config.addinivalue_line(
+        "filterwarnings", "error::RuntimeWarning:seo_crawler_spark.*"
     )
 
 

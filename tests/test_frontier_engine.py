@@ -103,8 +103,8 @@ def test_budget_cap_seen_matches_model(
 def test_no_bloom_same_result(spark, corpus_df, corpus_dict, robots_df, robots_dict):
     """Bloom filter is a prune, never a semantics change."""
     seeds = seed_urls(N_HOSTS)
-    cfg_b = CrawlConfig(max_depth=2, max_urls=150, use_bloom=True, bloom_min_seen=0)
-    cfg_n = CrawlConfig(max_depth=2, max_urls=150, use_bloom=False)
+    cfg_b = CrawlConfig(max_depth=2, max_urls=150, bloom_min_seen=0)
+    cfg_n = CrawlConfig(max_depth=2, max_urls=150, bloom_min_seen=None)
     r_b = CrawlEngine(spark, corpus_df, robots_df, cfg_b).run(seeds)
     r_n = CrawlEngine(spark, corpus_df, robots_df, cfg_n).run(seeds)
     ob = [r["url"] for r in r_b.order.collect()]
@@ -122,7 +122,7 @@ def test_politeness_budget_respected(spark, corpus_df, robots_df):
     seeds = seed_urls(N_HOSTS)
     cfg = CrawlConfig(
         max_depth=2, max_urls=10_000, politeness_budget=10,
-        salt_buckets=2, max_waves=40, use_bloom=False,
+        salt_buckets=2, max_waves=40, bloom_min_seen=None,
     )
     got = CrawlEngine(spark, corpus_df, robots_df, cfg).run(seeds)
     per_wave_host = (
@@ -142,7 +142,7 @@ def test_politeness_budget_respected(spark, corpus_df, robots_df):
         assert row["count"] <= cap, (row, b, cap)
 
     # same final seen set as un-throttled run
-    cfg2 = CrawlConfig(max_depth=2, max_urls=10_000, use_bloom=False)
+    cfg2 = CrawlConfig(max_depth=2, max_urls=10_000, bloom_min_seen=None)
     ref = CrawlEngine(spark, corpus_df, robots_df, cfg2).run(seeds)
     assert {r["url"] for r in got.seen.collect()} == {
         r["url"] for r in ref.seen.collect()

@@ -1,10 +1,11 @@
 """run_parallel (parallel.py): the driver-thread overlap helper behind
 the round-6 composition optimizations (spam_mass, rank_correlation,
 pagerank_warm_start, bowtie_structure, _bm25f_tables,
-dedup_incremental). Pins the three contract clauses the operators rely
-on: call-order results, exception propagation, and that concurrently
-checkpointed DataFrames carry exactly the values their sequential
-builds produce."""
+dedup_incremental) and the per-wave snapshot writes. Pins the contract
+clauses the callers rely on: call-order results (``[]`` for none),
+exception propagation, job tags inherited by the member threads, and
+that concurrently checkpointed DataFrames carry exactly the values their
+sequential builds produce."""
 
 from __future__ import annotations
 
@@ -65,3 +66,18 @@ def test_concurrent_checkpoints_match_sequential(spark):
     )
     assert sorted(map(tuple, par_a.collect())) == sorted(map(tuple, seq_a))
     assert sorted(map(tuple, par_b.collect())) == sorted(map(tuple, seq_b))
+
+
+def test_zero_thunks_give_empty_list():
+    assert run_parallel() == []
+
+
+def test_members_inherit_job_tags(spark):
+    # a tag set on the caller's thread must reach every member thread,
+    # so jobs the members submit are cancellable by that tag
+    spark.addTag("run-parallel-tag")
+    try:
+        tags = run_parallel(spark.getTags, spark.getTags)
+    finally:
+        spark.removeTag("run-parallel-tag")
+    assert all("run-parallel-tag" in t for t in tags)

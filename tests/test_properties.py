@@ -78,50 +78,3 @@ def test_bloom_no_false_negatives(hashes):
         ).astype(bool)
     assert hit.all()  # every inserted member must probe positive
 
-
-# ---------------------------------------------------------------------------
-# cuckoo-filter primitives (operators/cuckoo.py) — numpy level, no Spark
-# ---------------------------------------------------------------------------
-
-from seo_crawler_spark.operators.cuckoo import (  # noqa: E402
-    SLOTS,
-    _cells,
-    _fingerprints,
-    _insert_all,
-    size_for,
-)
-
-
-def _probe_np(table, hashes, m):
-    fp = _fingerprints(hashes)
-    i1, i2 = _cells(hashes, fp, m)
-    return (table[i1] == fp[:, None]).any(1) | (table[i2] == fp[:, None]).any(1)
-
-
-@given(st.integers(0, 2**32), st.integers(1, 1500))
-@settings(max_examples=50, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-def test_cuckoo_insert_probe_delete_invariants(seed, n):
-    """For any content: every inserted hash probes positive; deleting a
-    subset never produces a false negative for the kept items (dup
-    signatures are stored as separate copies)."""
-    rng = np.random.default_rng(seed)
-    hashes = rng.integers(-(2**62), 2**62, size=n, dtype=np.int64)
-    m = size_for(n)
-    table = np.zeros((m, SLOTS), dtype=np.uint16)
-    fp = _fingerprints(hashes)
-    i1, i2 = _cells(hashes, fp, m)
-    _insert_all(table, i1, i2, fp)
-    assert _probe_np(table, hashes, m).all()
-
-    # delete the first half (mirrors cuckoo_delete's per-bucket body)
-    k = n // 2
-    for a, b, f in zip(i1[:k].tolist(), i2[:k].tolist(), fp[:k].tolist()):
-        for cell in (a, b):
-            row = table[cell]
-            pos = np.nonzero(row == f)[0]
-            if len(pos):
-                row[pos[0]] = 0
-                break
-    kept = hashes[k:]
-    assert _probe_np(table, kept, m).all()

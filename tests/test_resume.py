@@ -29,12 +29,35 @@ def robots_df(spark):
 
 
 def test_resume_equals_uninterrupted(spark, corpus_df, robots_df, tmp_path):
+    _check_resume_equals_uninterrupted(
+        spark, corpus_df, robots_df, tmp_path, bloom_min_seen=None
+    )
+
+
+def test_resume_equals_uninterrupted_bloom(spark, corpus_df, robots_df, tmp_path):
+    """The bloom prune built from the restored seen table on resume
+    (bloom_min_seen=0: from the first wave of every run) must give the
+    crawl order of the uninterrupted exact run."""
+    _check_resume_equals_uninterrupted(
+        spark, corpus_df, robots_df, tmp_path, bloom_min_seen=0
+    )
+
+
+def _check_resume_equals_uninterrupted(
+    spark, corpus_df, robots_df, tmp_path, bloom_min_seen
+):
     seeds = seed_urls(N_HOSTS)
     state = str(tmp_path / "crawlstate")
 
-    # uninterrupted reference run
+    def cfg(**kw):
+        return CrawlConfig(
+            max_depth=3, max_urls=10_000, bloom_min_seen=bloom_min_seen, **kw
+        )
+
+    # uninterrupted reference run (exact anti-join only)
     full = CrawlEngine(
-        spark, corpus_df, robots_df, CrawlConfig(max_depth=3, max_urls=10_000)
+        spark, corpus_df, robots_df,
+        CrawlConfig(max_depth=3, max_urls=10_000, bloom_min_seen=None),
     ).run(seeds)
     full_order = [(r["url"], r["wave"]) for r in full.order.collect()]
     assert len(full_order) > 20
@@ -42,17 +65,13 @@ def test_resume_equals_uninterrupted(spark, corpus_df, robots_df, tmp_path):
     # interrupted: stop after 2 waves (simulated crash — wave snapshots
     # are the only surviving state)
     partial = CrawlEngine(
-        spark, corpus_df, robots_df,
-        CrawlConfig(max_depth=3, max_urls=10_000, max_waves=2),
-        state_dir=state,
+        spark, corpus_df, robots_df, cfg(max_waves=2), state_dir=state
     ).run(seeds)
     assert len(partial.metrics) == 2
 
     # resume from snapshots with a fresh engine instance
     resumed = CrawlEngine(
-        spark, corpus_df, robots_df,
-        CrawlConfig(max_depth=3, max_urls=10_000),
-        state_dir=state,
+        spark, corpus_df, robots_df, cfg(), state_dir=state
     ).resume()
 
     got_order = [(r["url"], r["wave"]) for r in resumed.order.collect()]
@@ -79,9 +98,7 @@ def test_resume_equals_uninterrupted(spark, corpus_df, robots_df, tmp_path):
     # a second resume must not shift the (wave, seq) contract either:
     # frontier is exhausted, so it returns the same tables untouched
     again = CrawlEngine(
-        spark, corpus_df, robots_df,
-        CrawlConfig(max_depth=3, max_urls=10_000),
-        state_dir=state,
+        spark, corpus_df, robots_df, cfg(), state_dir=state
     ).resume()
     assert [(r["url"], r["wave"]) for r in again.order.collect()] == full_order
     assert again.seen.count() == full.seen.count()
