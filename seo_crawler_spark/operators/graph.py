@@ -21,13 +21,34 @@ map-side-combined agg, scores checkpoint per iteration (without the
 lineage barrier iteration k replans all k-1 predecessors — the same
 quadratic-driver trap the wave loop avoids), and the edge table with
 its outdegree column is built once and reused.
+
+Shared pieces, each written once for the operators below:
+
+* ``_edges`` / ``_EDGES_SQL``: the generator edge list (Spark frame and
+  the oracle's ``e0`` CTE body);
+* ``_e2_table``: an edge frame annotated with ``outdeg``, checkpointed;
+* ``_gather``: one propagation half-step, Σ value over in-edges;
+* ``_pagerank`` / ``_pagerank_ctes``: the integer PageRank loop given a
+  seed frame and base term, and its oracle twin (pagerank, trustrank,
+  the warm-start loops);
+* ``_bfs`` / ``_bfs_ctes``: the delta-frontier BFS and its oracle twin
+  (seed distance, both bow-tie directions);
+* ``_ranked``: the ``row_number`` over (score desc, key asc) tail.
+
+Checkpoint rule: BOUNDED loops (a fixed iteration count, a handful of
+rounds) use plain ``localCheckpoint(eager=True)`` per step — the plan
+statistics gain a bounded number of factors. The one UNBOUNDED loop,
+connected_components, re-wraps every round through ``ckpt.local_ckpt``
+(stats-free), and its convergence fingerprint rides the checkpoint job
+as an ``Observation``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..ckpt import local_ckpt
 from ..functions.text import MD5INT_SQL, md5int
 from ..parallel import run_parallel
 from ..sources.tables import load
@@ -51,6 +72,11 @@ _GEN_EXPRS = (
         "(doc_id * 13 + 3) % (SELECT c FROM n)",
     ),
 )
+# the oracle's edge list (self-loops still in; callers filter), over a
+# ``n AS (SELECT count(*) AS c FROM documents)`` CTE
+_EDGES_SQL = " UNION ALL ".join(
+    f"SELECT doc_id AS src, {frag} AS dst FROM documents" for _, frag in _GEN_EXPRS
+)
 
 
 def _edges(docs: DataFrame, n: int) -> DataFrame:
@@ -67,63 +93,53 @@ def _edges(docs: DataFrame, n: int) -> DataFrame:
     return e.filter(F.col("src") != F.col("dst"))
 
 
-def _e2_table(docs: DataFrame, n: int) -> DataFrame:
+def _e2_table(e: DataFrame) -> DataFrame:
     """Degree-annotated edge table (src, dst, outdeg), checkpointed.
-    Built identically by pagerank / trustrank / opic — compositions
-    (spam_mass, rank_correlation) build it ONCE and pass it through
-    their members' ``_e2`` parameter (round 6: each member used to
-    re-derive and re-checkpoint the same table)."""
-    e = _edges(docs, n)
+    Compositions (spam_mass, rank_correlation) build it ONCE and pass it
+    through their members' ``_e2`` parameter."""
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     return e.join(outdeg, "src").localCheckpoint(eager=True)
 
 
-def pagerank(
-    spark: SparkSession, sf_dir: str, iters: int = ITERS,
-    _e2: DataFrame | None = None,
+def _gather(
+    edges: DataFrame, state: DataFrame, src: str, dst: str, value: str
 ) -> DataFrame:
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e2 = _e2 if _e2 is not None else _e2_table(docs, n)
+    """One propagation half-step: (doc_id, m) with m = Σ ``value`` (a SQL
+    expression over edge and state columns) over the edges whose ``src``
+    end matches ``state.doc_id``, keyed by their ``dst`` end. One
+    equi-join + one map-side-combined sum; nodes without such edges are
+    absent (callers left-join onto their node set)."""
+    return (
+        edges.join(state, edges[src] == state.doc_id)
+        .groupBy(F.col(dst).alias("doc_id"))
+        .agg(F.sum(F.expr(value)).alias("m"))
+    )
 
-    score = docs.select("doc_id", F.lit(SCALE).cast("long").alias("score"))
+
+def _pagerank(
+    e2: DataFrame, docs: DataFrame, score: DataFrame, base: Column, iters: int
+) -> DataFrame:
+    """``iters`` integer PageRank steps from the seed ``score`` frame
+    (doc_id, score): score ← base + Σ (score·85) div (100·outdeg) over
+    in-edges of the ``_e2_table`` frame, ``base`` a long Column over
+    ``doc_id``. Checkpointed per step to truncate lineage."""
     for _ in range(iters):
-        contrib = (
-            e2.join(score, e2.src == score.doc_id)
-            .select(
-                "dst",
-                F.expr(
-                    f"(score * {DAMP_NUM}) div ({DAMP_DEN} * outdeg)"
-                ).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("m"))
+        m = _gather(
+            e2, score, "src", "dst",
+            f"(score * {DAMP_NUM}) div ({DAMP_DEN} * outdeg)",
         )
         score = (
-            docs.join(contrib, docs.doc_id == contrib.dst, "left")
-            .select(
-                "doc_id",
-                (F.lit(BASE).cast("long") + F.coalesce("m", F.lit(0))).alias(
-                    "score"
-                ),
-            )
-            .localCheckpoint(eager=True)  # truncate per-iteration lineage
+            docs.join(m, "doc_id", "left")
+            .select("doc_id", (base + F.coalesce("m", F.lit(0))).alias("score"))
+            .localCheckpoint(eager=True)
         )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        score.withColumn("rnk", F.row_number().over(w))
-        .select("doc_id", "score", "rnk")
-        .orderBy("rnk")
-    )
+    return score
 
 
-def pagerank_sql(iters: int = ITERS) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
+def _pagerank_ctes(base: str, iters: int) -> list[str]:
+    """Oracle twin of :func:`_pagerank`: CTEs s1..s{iters} over ``e2``
+    from the caller's seed CTE s0, ``base`` the SQL term over
+    ``d.doc_id``."""
     steps = []
     prev = "s0"
     for k in range(1, iters + 1):
@@ -132,24 +148,89 @@ def pagerank_sql(iters: int = ITERS) -> str:
             # a derived table; without the hint DuckDB inlines CTEs and
             # re-executes the whole iteration prefix at every reference
             # (exponential in iters — measured 20+s at sf0.001).
-            f"s{k} AS MATERIALIZED (SELECT d.doc_id, ({BASE} + coalesce(x.m, 0))::BIGINT AS score "
+            f"s{k} AS MATERIALIZED (SELECT d.doc_id, ({base} + coalesce(x.m, 0))::BIGINT AS score "
             f"FROM documents d LEFT JOIN ("
             f"SELECT e2.dst, sum((s.score * {DAMP_NUM}) // ({DAMP_DEN} * e2.outdeg)) AS m "
             f"FROM e2 JOIN {prev} s ON e2.src = s.doc_id GROUP BY e2.dst"
             f") x ON d.doc_id = x.dst)"
         )
         prev = f"s{k}"
+    return steps
+
+
+def _ranked(df: DataFrame, score: str, key: str, *cols) -> DataFrame:
+    """``cols`` plus ``rnk`` = row_number over (score desc, key asc),
+    ordered by rnk."""
+    w = Window.orderBy(F.desc(score), F.asc(key))
+    return df.select(*cols, F.row_number().over(w).alias("rnk")).orderBy("rnk")
+
+
+def _bfs(
+    seed: DataFrame, edges: DataFrame, src: str, dst: str, hops: int
+) -> DataFrame:
+    """Delta-frontier BFS: (doc_id, dist) for every node within ``hops``
+    of the ``seed`` doc_ids, following edges from their ``src`` end to
+    their ``dst`` end. Per hop only the newly discovered frontier joins
+    the edge table, then dedupes and anti-joins the visited set — the
+    crawl loop's seen anti-join — so the work is O(reachable), not
+    O(V·hops). ONE checkpoint per hop: the folded visited set is the
+    barrier and the next frontier is a filter over its blocks."""
+    visited = seed.select("doc_id", F.lit(0).alias("dist"))
+    frontier = visited.select("doc_id")
+    for hop in range(1, hops + 1):
+        nxt = (
+            frontier.join(edges, frontier.doc_id == edges[src])
+            .select(F.col(dst).alias("doc_id"))
+            .distinct()
+            .join(visited.select("doc_id"), "doc_id", "left_anti")
+            .select("doc_id", F.lit(hop).alias("dist"))
+        )
+        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        frontier = visited.filter(F.col("dist") == hop).select("doc_id")
+    return visited
+
+
+def _bfs_ctes(tag: str, src: str, dst: str, hops: int) -> list[str]:
+    """Oracle twin of :func:`_bfs`: CTEs {tag}1..{tag}{hops} over the
+    edge CTE ``e``, each the previous visited set plus its new hop;
+    {tag}0 (doc_id, dist = 0) is the caller's seed CTE."""
+    out = []
+    prev = f"{tag}0"
+    for k in range(1, hops + 1):
+        out.append(
+            f"{tag}{k} AS MATERIALIZED (SELECT * FROM {prev} UNION ALL "
+            f"SELECT f.doc_id, {k} AS dist FROM ("
+            f"SELECT DISTINCT e.{dst} AS doc_id FROM e "
+            f"JOIN {prev} p ON e.{src} = p.doc_id WHERE p.dist = {k - 1}"
+            f") f WHERE f.doc_id NOT IN (SELECT doc_id FROM {prev}))"
+        )
+        prev = f"{tag}{k}"
+    return out
+
+
+def pagerank(
+    spark: SparkSession, sf_dir: str, iters: int = ITERS,
+    _e2: DataFrame | None = None,
+) -> DataFrame:
+    docs = load(spark, "documents", sf_dir).select("doc_id")
+    e2 = _e2 if _e2 is not None else _e2_table(_edges(docs, docs.count()))
+    uniform = docs.select("doc_id", F.lit(SCALE).cast("long").alias("score"))
+    score = _pagerank(e2, docs, uniform, F.lit(BASE).cast("long"), iters)
+    return _ranked(score, "score", "doc_id", "doc_id", "score")
+
+
+def pagerank_sql(iters: int = ITERS) -> str:
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS MATERIALIZED (SELECT * FROM e0 WHERE src <> dst),
 od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
 e2 AS MATERIALIZED (SELECT e.src, e.dst, od.outdeg FROM e JOIN od USING (src)),
 s0 AS (SELECT doc_id, {SCALE}::BIGINT AS score FROM documents),
-{', '.join(steps)}
+{', '.join(_pagerank_ctes(str(BASE), iters))}
 SELECT doc_id, score,
        row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rnk
-FROM {prev} ORDER BY rnk
+FROM s{iters} ORDER BY rnk
 """
 
 
@@ -186,74 +267,32 @@ def trustrank_scores(
     driver scalars, the pagerank-n pattern."""
     docs = load(spark, "documents", sf_dir).select("doc_id")
     n = docs.count()
-    e2 = _e2 if _e2 is not None else _e2_table(docs, n)
+    e2 = _e2 if _e2 is not None else _e2_table(_edges(docs, n))
 
     tbase = (BASE * n) // n_seeds
     seed_base = F.when(
         F.col("doc_id") < n_seeds, F.lit(tbase).cast("long")
     ).otherwise(F.lit(0).cast("long"))
-    score = docs.select("doc_id", seed_base.alias("score"))
-    for _ in range(iters):
-        contrib = (
-            e2.join(score, e2.src == score.doc_id)
-            .select(
-                "dst",
-                F.expr(
-                    f"(score * {DAMP_NUM}) div ({DAMP_DEN} * outdeg)"
-                ).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("m"))
-        )
-        score = (
-            docs.join(contrib, docs.doc_id == contrib.dst, "left")
-            .select(
-                "doc_id",
-                (seed_base + F.coalesce("m", F.lit(0))).alias("score"),
-            )
-            .localCheckpoint(eager=True)  # truncate per-iteration lineage
-        )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        score.withColumn("rnk", F.row_number().over(w))
-        .select(
-            "doc_id",
-            F.col("score").alias("tscore"),
-            (F.col("score") > 0).alias("reachable"),
-            "rnk",
-        )
-        .orderBy("rnk")
+    seed = docs.select("doc_id", seed_base.alias("score"))
+    score = _pagerank(e2, docs, seed, seed_base, iters)
+    return _ranked(
+        score, "score", "doc_id",
+        "doc_id",
+        F.col("score").alias("tscore"),
+        (F.col("score") > 0).alias("reachable"),
     )
 
 
 def trustrank_sql(iters: int = ITERS, n_seeds: int = TRUST_SEEDS) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     base = (
         f"(CASE WHEN d.doc_id < {n_seeds} THEN (SELECT v FROM tb) "
         f"ELSE 0 END)"
     )
-    steps = []
-    prev = "s0"
-    for k in range(1, iters + 1):
-        steps.append(
-            f"s{k} AS MATERIALIZED (SELECT d.doc_id, "
-            f"({base} + coalesce(x.m, 0))::BIGINT AS score "
-            f"FROM documents d LEFT JOIN ("
-            f"SELECT e2.dst, sum((s.score * {DAMP_NUM}) // ({DAMP_DEN} * e2.outdeg)) AS m "
-            f"FROM e2 JOIN {prev} s ON e2.src = s.doc_id GROUP BY e2.dst"
-            f") x ON d.doc_id = x.dst)"
-        )
-        prev = f"s{k}"
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
 tb AS (SELECT ({BASE}::BIGINT * (SELECT c FROM n))
        // (SELECT count(*) FROM documents WHERE doc_id < {n_seeds}) AS v),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS MATERIALIZED (SELECT * FROM e0 WHERE src <> dst),
 od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
 e2 AS MATERIALIZED (SELECT e.src, e.dst, od.outdeg FROM e JOIN od USING (src)),
@@ -261,10 +300,10 @@ s0 AS (SELECT doc_id,
               (CASE WHEN doc_id < {n_seeds} THEN (SELECT v FROM tb)
                ELSE 0 END)::BIGINT AS score
        FROM documents),
-{', '.join(steps)}
+{', '.join(_pagerank_ctes(base, iters))}
 SELECT doc_id, score AS tscore, score > 0 AS reachable,
        row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rnk
-FROM {prev} ORDER BY rnk
+FROM s{iters} ORDER BY rnk
 """
 
 
@@ -384,8 +423,6 @@ def anchor_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ec = e.select("src", "dst", anchor.alias("anchor"))
     per_anchor = ec.groupBy("dst", "anchor").agg(F.count(F.lit(1)).alias("c"))
-    from pyspark.sql import Window
-
     w = Window.partitionBy("dst").orderBy(F.desc("c"), F.asc("anchor"))
     top = (
         per_anchor.withColumn("rnk", F.row_number().over(w))
@@ -411,15 +448,11 @@ def anchor_text_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def anchor_text_agg_sql() -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     v = len(_ANCHOR_VOCAB)
     vocab = ", ".join(f"'{a}'" for a in _ANCHOR_VOCAB)
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS (SELECT * FROM e0 WHERE src <> dst),
 ec AS (SELECT src, dst, ([{vocab}])[((src + dst) % {v}) + 1] AS anchor FROM e),
 pa AS (SELECT dst, anchor, count(*) AS c FROM ec GROUP BY dst, anchor),
@@ -468,7 +501,10 @@ def hits_scores(spark: SparkSession, sf_dir: str, iters: int = HITS_ITERS) -> Da
     n = docs.count()
     e = _edges(docs, n).localCheckpoint(eager=True)
 
-    def _normalized(raw: DataFrame, col: str) -> DataFrame:
+    def _normalized(sums: DataFrame, col: str) -> DataFrame:
+        raw = docs.join(sums, "doc_id", "left").select(
+            "doc_id", F.coalesce("m", F.lit(0)).alias(col)
+        )
         total = raw.agg(F.sum(col).alias("__t"))
         return (
             raw.crossJoin(total)
@@ -482,44 +518,14 @@ def hits_scores(spark: SparkSession, sf_dir: str, iters: int = HITS_ITERS) -> Da
     hub = docs.select("doc_id", F.lit(SCALE).cast("long").alias("hub"))
     auth = None
     for _ in range(iters):
-        raw_auth = (
-            e.join(hub, e.src == hub.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.sum("hub").alias("auth"))
-        )
-        auth = _normalized(
-            docs.join(raw_auth, "doc_id", "left").select(
-                "doc_id", F.coalesce("auth", F.lit(0)).alias("auth")
-            ),
-            "auth",
-        )
-        raw_hub = (
-            e.join(auth, e.dst == auth.doc_id)
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.sum("auth").alias("hub"))
-        )
-        hub = _normalized(
-            docs.join(raw_hub, "doc_id", "left").select(
-                "doc_id", F.coalesce("hub", F.lit(0)).alias("hub")
-            ),
-            "hub",
-        )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("auth"), F.asc("doc_id"))
-    return (
-        hub.join(auth, "doc_id")
-        .withColumn("rnk", F.row_number().over(w))
-        .select("doc_id", "hub", "auth", "rnk")
-        .orderBy("rnk")
+        auth = _normalized(_gather(e, hub, "src", "dst", "hub"), "auth")
+        hub = _normalized(_gather(e, auth, "dst", "src", "auth"), "hub")
+    return _ranked(
+        hub.join(auth, "doc_id"), "auth", "doc_id", "doc_id", "hub", "auth"
     )
 
 
 def hits_scores_sql(iters: int = HITS_ITERS) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     steps = []
     prev_hub = "h0"
     prev_auth = None
@@ -552,7 +558,7 @@ def hits_scores_sql(iters: int = HITS_ITERS) -> str:
         prev_hub = f"h{k}"
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS MATERIALIZED (SELECT * FROM e0 WHERE src <> dst),
 h0 AS (SELECT doc_id, {SCALE}::BIGINT AS hub FROM documents),
 {', '.join(steps)}
@@ -592,17 +598,16 @@ def connected_components(
     step emits at most one edge per (node, neighbor)). The loop is
     UNBOUNDED, so every round re-wraps through ``local_ckpt`` (the
     stats-squaring trap in PLANS.md §"iterative-plan stats blowup")
-    and convergence is checked with a 1-row fingerprint collect
-    (count + xor-ish hash sum) — a bounded driver scalar per round,
-    O(log n) rounds total.
+    and convergence is checked with a (count, xor-folded hash)
+    fingerprint that an ``Observation`` collects from the round's
+    checkpoint job itself — no second job per round, O(log n) rounds
+    total.
 
     Input: (u, v) int64 edge list, any orientation, self-loops ok.
     Output: (node, label) for every node incident to >= 1 edge, label
     = the component's minimum node id. Algorithm verified against
     union-find on 300 random graphs + a diameter-4999 chain (14
     rounds) in tests/test_connected_components.py."""
-    from ..ckpt import local_ckpt
-
     e = (
         edges.filter(F.col("u") != F.col("v"))
         .select(
@@ -639,19 +644,22 @@ def connected_components(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
         ss_u = mins2.select("u", F.col("m").alias("v"))
+        obs = Observation()
         e = (
             ss_n.unionByName(ss_u)
             .filter(F.col("u") != F.col("v"))
             .distinct()
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                # xor-fold, not sum: an int64 sum of per-edge hashes
+                # overflows under ANSI mode; xor is closed over int64
+                F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+            )
             .transform(local_ckpt)
         )
-        fp = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # xor-fold, not sum: an int64 sum of per-edge hashes
-            # overflows under ANSI mode; xor is closed over int64
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).collect()[0]
-        fp = (fp["n"], fp["h"])
+        got = obs.get
+        fp = (got["n"], got["h"])
         if fp == prev_fp:
             if stats is not None:
                 stats["rounds"] = rnd + 1
@@ -759,7 +767,7 @@ def spam_mass(
     # consume the identical e2; building it once drops one full
     # edge-gen + degree-agg + checkpoint pass from the composition
     docs = load(spark, "documents", sf_dir).select("doc_id")
-    e2 = _e2_table(docs, docs.count())
+    e2 = _e2_table(_edges(docs, docs.count()))
     # the two member loops are independent given the shared e2 — run
     # them from two driver threads so their per-iteration job latencies
     # overlap (guide §2.6); scores are the identical DataFrames the
@@ -834,25 +842,8 @@ def seed_distance_bfs(
     docs = load(spark, "documents", sf_dir).select("doc_id")
     n = docs.count()
     e = _edges(docs, n).localCheckpoint(eager=True)
-
-    visited = docs.filter(F.col("doc_id") < n_seeds).select(
-        "doc_id", F.lit(0).alias("dist")
-    )
-    frontier = visited.select("doc_id")
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier.doc_id == e.src)
-            .select(F.col("dst").alias("doc_id"))
-            .distinct()
-            .join(visited.select("doc_id"), "doc_id", "left_anti")
-            .select("doc_id", F.lit(hop).alias("dist"))
-        )
-        # ONE checkpoint per hop (round 6): the folded visited set is
-        # the materialization barrier; the next frontier is a filter
-        # over its blocks (dist = hop), so the former per-hop frontier
-        # checkpoint — a second full job round — is redundant
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = visited.filter(F.col("dist") == hop).select("doc_id")
+    seeds = docs.filter(F.col("doc_id") < n_seeds)
+    visited = _bfs(seeds, e, "src", "dst", max_hops)
     return (
         docs.join(visited, "doc_id", "left")
         .select(
@@ -866,29 +857,14 @@ def seed_distance_bfs(
 def seed_distance_sql(
     max_hops: int = BFS_HOPS, n_seeds: int = TRUST_SEEDS
 ) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
-    steps = []
-    prev = "v0"
-    for k in range(1, max_hops + 1):
-        steps.append(
-            f"v{k} AS MATERIALIZED (SELECT * FROM {prev} UNION ALL "
-            f"SELECT f.doc_id, {k} AS dist FROM ("
-            f"SELECT DISTINCT e.dst AS doc_id FROM e "
-            f"JOIN {prev} p ON e.src = p.doc_id WHERE p.dist = {k - 1}"
-            f") f WHERE f.doc_id NOT IN (SELECT doc_id FROM {prev}))"
-        )
-        prev = f"v{k}"
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS MATERIALIZED (SELECT * FROM e0 WHERE src <> dst),
 v0 AS (SELECT doc_id, 0 AS dist FROM documents WHERE doc_id < {n_seeds}),
-{', '.join(steps)}
+{', '.join(_bfs_ctes('v', 'src', 'dst', max_hops))}
 SELECT d.doc_id, coalesce(v.dist, -1)::INT AS dist
-FROM documents d LEFT JOIN {prev} v ON d.doc_id = v.doc_id
+FROM documents d LEFT JOIN v{max_hops} v ON d.doc_id = v.doc_id
 ORDER BY d.doc_id
 """
 
@@ -924,8 +900,7 @@ def opic_priority(
     pagerank's dangling mass), so k rounds are bit-identical between
     Spark and the unrolled DuckDB CTE oracle."""
     docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e2 = _e2 if _e2 is not None else _e2_table(docs, n)
+    e2 = _e2 if _e2 is not None else _e2_table(_edges(docs, docs.count()))
 
     state = docs.select(
         "doc_id",
@@ -933,14 +908,9 @@ def opic_priority(
         F.lit(0).cast("long").alias("hist"),
     )
     for _ in range(iters):
-        inflow = (
-            e2.join(state, e2.src == state.doc_id)
-            .select("dst", F.expr("cash div outdeg").alias("share"))
-            .groupBy("dst")
-            .agg(F.sum("share").alias("m"))
-        )
+        inflow = _gather(e2, state, "src", "dst", "cash div outdeg")
         state = (
-            state.join(inflow, state.doc_id == inflow.dst, "left")
+            state.join(inflow, "doc_id", "left")
             .select(
                 "doc_id",
                 F.coalesce("m", F.lit(0)).cast("long").alias("cash"),
@@ -948,24 +918,14 @@ def opic_priority(
             )
             .localCheckpoint(eager=True)  # truncate per-round lineage
         )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(
-        F.desc(F.col("hist") + F.col("cash")), F.asc("doc_id")
-    )
-    return (
-        state.withColumn("priority", F.col("hist") + F.col("cash"))
-        .withColumn("rnk", F.row_number().over(w))
-        .select("doc_id", "cash", "hist", "priority", "rnk")
-        .orderBy("rnk")
+    return _ranked(
+        state.withColumn("priority", F.col("hist") + F.col("cash")),
+        "priority", "doc_id",
+        "doc_id", "cash", "hist", "priority",
     )
 
 
 def opic_priority_sql(iters: int = OPIC_ITERS) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     steps = []
     prev = "s0"
     for k in range(1, iters + 1):
@@ -981,7 +941,7 @@ def opic_priority_sql(iters: int = OPIC_ITERS) -> str:
         prev = f"s{k}"
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS MATERIALIZED (SELECT * FROM e0 WHERE src <> dst),
 od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
 e2 AS MATERIALIZED (SELECT e.src, e.dst, od.outdeg FROM e JOIN od USING (src)),
@@ -1061,13 +1021,9 @@ def cocitation_similarity(
 
 
 def cocitation_similarity_sql(out_cap: int = COCITE_OUT_CAP) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS MATERIALIZED (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
 outs AS (
   SELECT src, list_sort(list(dst)) AS ds
@@ -1165,26 +1121,14 @@ def host_rank(
             .localCheckpoint(eager=True)
         )
     indeg = he2.groupBy("hdst").agg(F.count(F.lit(1)).alias("in_hosts"))
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("score"), F.asc("host"))
-    return (
-        score.join(indeg, score.host == indeg.hdst, "left")
-        .select(
-            "host",
-            "score",
-            F.coalesce("in_hosts", F.lit(0)).alias("in_hosts"),
-            F.row_number().over(w).alias("rnk"),
-        )
-        .orderBy("rnk")
+    return _ranked(
+        score.join(indeg, score.host == indeg.hdst, "left"),
+        "score", "host",
+        "host", "score", F.coalesce("in_hosts", F.lit(0)).alias("in_hosts"),
     )
 
 
 def host_rank_sql(iters: int = HOST_ITERS) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     steps = []
     prev = "s0"
     for k in range(1, iters + 1):
@@ -1198,7 +1142,7 @@ def host_rank_sql(iters: int = HOST_ITERS) -> str:
         prev = f"s{k}"
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS (SELECT * FROM e0 WHERE src <> dst),
 hm AS (SELECT doc_id, source AS host FROM documents),
 he AS MATERIALIZED (
@@ -1355,13 +1299,8 @@ def hyperball_sql(iters: int = HB_ITERS) -> str:
         _lc_case_sql,
         _rho_sql,
     )
-    from ..functions.text import MD5INT_SQL
 
     an, ad = HLL_ALPHA
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     h = MD5INT_SQL.format(c="doc_id::VARCHAR")
 
     def est_cte(state: str, t: int) -> str:
@@ -1402,7 +1341,7 @@ def hyperball_sql(iters: int = HB_ITERS) -> str:
     )
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS MATERIALIZED (SELECT * FROM e0 WHERE src <> dst),
 s0 AS MATERIALIZED (
   SELECT doc_id, ({h}) % {HLL_M} AS j,
@@ -1507,13 +1446,9 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def triangle_count_sql() -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS (SELECT * FROM e0 WHERE src <> dst),
 und AS MATERIALIZED (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e
@@ -1624,10 +1559,6 @@ def label_propagation(
 
 
 def label_propagation_sql(iters: int = LPA_ITERS) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     steps = []
     prev = "l0"
     for t in range(1, iters + 1):
@@ -1644,7 +1575,7 @@ def label_propagation_sql(iters: int = LPA_ITERS) -> str:
         prev = f"l{t}"
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 ed AS (SELECT * FROM e0 WHERE src <> dst),
 e AS MATERIALIZED (
   SELECT DISTINCT src, dst FROM (
@@ -1774,10 +1705,6 @@ def kcore_decomposition(
 
 
 def kcore_sql(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     steps = []
     prev_e = "und"
     prev_p = None
@@ -1804,7 +1731,7 @@ def kcore_sql(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
         prev_p = f"p{r}"
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 ed AS (SELECT * FROM e0 WHERE src <> dst),
 und AS MATERIALIZED (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed
@@ -1846,12 +1773,10 @@ def rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, stated in the ORDER — the classifier-AUC midrank approach
     is unnecessary here because the tie-break makes ranks total).
     """
-    from pyspark.sql import Window
-
     # shared e2 across the two member rankers (round 6, spam_mass
     # discipline — they build identical degree-annotated edge tables)
     dd = load(spark, "documents", sf_dir).select("doc_id")
-    e2 = _e2_table(dd, dd.count())
+    e2 = _e2_table(_edges(dd, dd.count()))
     # independent member loops over the shared e2 → two driver threads
     # (guide §2.6, spam_mass discipline): per-iteration latencies
     # overlap, identical score tables
@@ -2080,35 +2005,8 @@ def pagerank_warm_start(
     ).filter(F.col("src") != F.col("dst"))
     e_new = e_old.unionByName(delta)
 
-    def prep(e: DataFrame) -> DataFrame:
-        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        return e.join(outdeg, "src").localCheckpoint(eager=True)
-
     def loop(e2: DataFrame, iters: int, seed: DataFrame) -> DataFrame:
-        score = seed
-        for _ in range(iters):
-            contrib = (
-                e2.join(score, e2.src == score.doc_id)
-                .select(
-                    "dst",
-                    F.expr(
-                        f"(score * {DAMP_NUM}) div ({DAMP_DEN} * outdeg)"
-                    ).alias("c"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("c").alias("m"))
-            )
-            score = (
-                docs.join(contrib, docs.doc_id == contrib.dst, "left")
-                .select(
-                    "doc_id",
-                    (
-                        F.lit(BASE).cast("long") + F.coalesce("m", F.lit(0))
-                    ).alias("score"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        return score
+        return _pagerank(e2, docs, seed, F.lit(BASE).cast("long"), iters)
 
     uniform = docs.select(
         "doc_id", F.lit(SCALE).cast("long").alias("score")
@@ -2117,7 +2015,7 @@ def pagerank_warm_start(
     # and shared by the full/warm/cold loops (it was re-built and
     # re-checkpointed per loop — two redundant corpus passes)
     e2_old, e2_new = run_parallel(
-        lambda: prep(e_old), lambda: prep(e_new)
+        lambda: _e2_table(e_old), lambda: _e2_table(e_new)
     )
     # dependency graph: old → warm; full and cold depend only on
     # e2_new. Three driver threads (guide §2.6) collapse the 2·ITERS +
@@ -2149,11 +2047,6 @@ def pagerank_warm_start(
 
 
 def pagerank_warm_start_sql(warm_iters: int = WARM_ITERS) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
-
     def loop_ctes(tag: str, e: str, iters: int, seed: str) -> list[str]:
         steps = [
             f"od_{tag} AS (SELECT src, count(*) AS outdeg FROM {e} GROUP BY src)"
@@ -2181,7 +2074,7 @@ def pagerank_warm_start_sql(warm_iters: int = WARM_ITERS) -> str:
     )
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 eo AS MATERIALIZED (SELECT * FROM e0 WHERE src <> dst),
 dl AS (SELECT doc_id AS src, (doc_id * 7 + 11) % (SELECT c FROM n) AS dst
        FROM documents WHERE doc_id % 10 = 0),
@@ -2238,59 +2131,34 @@ def salsa_scores(
     SALSA extends SURVEY §2's graph family (pagerank/hits/trustrank/
     opic) with the degree-normalized member."""
     docs = load(spark, "documents", sf_dir).select("doc_id")
-    n = docs.count()
-    e = _edges(docs, n)
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    e = _edges(docs, docs.count())
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
-    e3 = (
-        e.join(outdeg, "src").join(indeg, "dst").localCheckpoint(eager=True)
-    )
+    e3 = _e2_table(e.join(indeg, "dst"))
+
+    def _filled(sums: DataFrame, col: str) -> DataFrame:
+        return docs.join(sums, "doc_id", "left").select(
+            "doc_id", F.coalesce("m", F.lit(0)).alias(col)
+        )
 
     hub = docs.select("doc_id", F.lit(SCALE).cast("long").alias("hub"))
     auth = None
     for _ in range(iters):
-        raw_auth = (
-            e3.join(hub, e3.src == hub.doc_id)
-            .select("dst", F.expr("hub div outdeg").alias("c"))
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.sum("c").alias("auth"))
-        )
         # the auth half-step stays LAZY (round 6): it is referenced
         # exactly once — by the hub half-step below (and, after the
         # final iteration, once by the output join) — so folding it
         # into the hub job halves the per-iteration job rounds with a
         # bounded depth-2 plan per checkpoint (no lineage compounding;
         # identical integer sums either way)
-        auth = docs.join(raw_auth, "doc_id", "left").select(
-            "doc_id", F.coalesce("auth", F.lit(0)).alias("auth")
-        )
-        raw_hub = (
-            e3.join(auth, e3.dst == auth.doc_id)
-            .select("src", F.expr("auth div indeg").alias("c"))
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.sum("c").alias("hub"))
-        )
-        hub = (
-            docs.join(raw_hub, "doc_id", "left")
-            .select("doc_id", F.coalesce("hub", F.lit(0)).alias("hub"))
-            .localCheckpoint(eager=True)
-        )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("auth"), F.asc("doc_id"))
-    return (
-        hub.join(auth, "doc_id")
-        .withColumn("rnk", F.row_number().over(w))
-        .select("doc_id", "hub", "auth", "rnk")
-        .orderBy("rnk")
+        auth = _filled(_gather(e3, hub, "src", "dst", "hub div outdeg"), "auth")
+        hub = _filled(
+            _gather(e3, auth, "dst", "src", "auth div indeg"), "hub"
+        ).localCheckpoint(eager=True)
+    return _ranked(
+        hub.join(auth, "doc_id"), "auth", "doc_id", "doc_id", "hub", "auth"
     )
 
 
 def salsa_sql(iters: int = SALSA_ITERS) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     steps = []
     prev_hub = "h0"
     prev_auth = None
@@ -2311,7 +2179,7 @@ def salsa_sql(iters: int = SALSA_ITERS) -> str:
         prev_hub = f"h{k}"
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS MATERIALIZED (SELECT * FROM e0 WHERE src <> dst),
 od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
 id_ AS (SELECT dst, count(*) AS indeg FROM e GROUP BY dst),
@@ -2399,8 +2267,6 @@ def linkpred_resource_alloc(
     top = non_edges.orderBy(
         F.desc("ra_score"), F.asc("u"), F.asc("v")
     ).limit(k)
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.desc("ra_score"), F.asc("u"), F.asc("v"))
     return (
         top.withColumn("rnk", F.row_number().over(w))
@@ -2410,13 +2276,9 @@ def linkpred_resource_alloc(
 
 
 def linkpred_sql(k: int = RA_TOPK) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS (SELECT * FROM e0 WHERE src <> dst),
 und AS MATERIALIZED (
   SELECT DISTINCT src, dst FROM (
@@ -2499,32 +2361,12 @@ def bowtie_structure(
         .select(F.col("dst").alias("doc_id"))
     )
 
-    def _bfs(src_col: str, dst_col: str) -> DataFrame:
-        visited = pivot.select("doc_id", F.lit(0).alias("dist"))
-        frontier = visited.select("doc_id")
-        for hop in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(e, frontier.doc_id == e[src_col])
-                .select(F.col(dst_col).alias("doc_id"))
-                .distinct()
-                .join(visited.select("doc_id"), "doc_id", "left_anti")
-                .select("doc_id", F.lit(hop).alias("dist"))
-            )
-            # ONE checkpoint per hop (round 6, seed_distance_bfs
-            # discipline): fold into visited, then filter the next
-            # frontier out of the checkpointed blocks — halves the
-            # per-hop job rounds across the 2 × max_hops BFS loop
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = visited.filter(F.col("dist") == hop).select(
-                "doc_id"
-            )
-        return visited
-
     # forward and backward BFS are independent given the checkpointed
     # edge table — two driver threads (guide §2.6) overlap the 2 ×
     # max_hops per-hop job rounds; visited sets identical
     fwd_v, bwd_v = run_parallel(
-        lambda: _bfs("src", "dst"), lambda: _bfs("dst", "src")
+        lambda: _bfs(pivot, e, "src", "dst", max_hops),
+        lambda: _bfs(pivot, e, "dst", "src", max_hops),
     )
     fwd = fwd_v.withColumnRenamed("dist", "fwd_dist")
     bwd = bwd_v.withColumnRenamed("dist", "bwd_dist")
@@ -2551,29 +2393,13 @@ def bowtie_structure(
 
 
 def bowtie_sql(max_hops: int = BT_HOPS) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     deadsql = MD5INT_SQL.format(c="'dead:' || CAST(src AS VARCHAR)")
-
-    def steps(tag: str, src: str, dst: str) -> list[str]:
-        out = []
-        prev = f"{tag}0"
-        for k in range(1, max_hops + 1):
-            out.append(
-                f"{tag}{k} AS MATERIALIZED (SELECT * FROM {prev} UNION ALL "
-                f"SELECT f.doc_id, {k} AS dist FROM ("
-                f"SELECT DISTINCT e.{dst} AS doc_id FROM e "
-                f"JOIN {prev} p ON e.{src} = p.doc_id WHERE p.dist = {k - 1}"
-                f") f WHERE f.doc_id NOT IN (SELECT doc_id FROM {prev}))"
-            )
-            prev = f"{tag}{k}"
-        return out
-
+    bfs = _bfs_ctes("f", "src", "dst", max_hops) + _bfs_ctes(
+        "b", "dst", "src", max_hops
+    )
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS MATERIALIZED (
   SELECT * FROM e0
   WHERE src <> dst AND {deadsql} % {BT_DEAD_MOD} <> {BT_DEAD_RES}),
@@ -2582,7 +2408,7 @@ piv AS (SELECT dst AS doc_id FROM (
   ORDER BY c DESC, dst ASC LIMIT 1)),
 f0 AS (SELECT doc_id, 0 AS dist FROM piv),
 b0 AS (SELECT doc_id, 0 AS dist FROM piv),
-{', '.join(steps('f', 'src', 'dst') + steps('b', 'dst', 'src'))}
+{', '.join(bfs)}
 SELECT d.doc_id,
        coalesce(f.dist, -1)::INT AS fwd_dist,
        coalesce(b.dist, -1)::INT AS bwd_dist,
@@ -2635,8 +2461,6 @@ def random_walks(
     docs = load(spark, "documents", sf_dir).select("doc_id")
     n = docs.count()
     e = _edges(docs, n)
-    from pyspark.sql import Window
-
     wr = Window.partitionBy("src").orderBy("dst")
     er = (
         e.distinct()
@@ -2680,10 +2504,6 @@ def random_walks(
 
 
 def random_walks_sql(length: int = WALK_LEN) -> str:
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     steps = []
     prev = "w0"
     for t in range(1, length + 1):
@@ -2701,7 +2521,7 @@ def random_walks_sql(length: int = WALK_LEN) -> str:
         prev = f"w{t}"
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
 er AS MATERIALIZED (
   SELECT src, dst,

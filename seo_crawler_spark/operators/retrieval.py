@@ -642,15 +642,11 @@ def bm25f_topk(
 
 
 def bm25f_topk_sql() -> str:
-    from .graph import _ANCHOR_VOCAB, _GEN_EXPRS
+    from .graph import _ANCHOR_VOCAB, _EDGES_SQL
 
     tok = TOKENS_SQL.format(c="text")
     v = len(_ANCHOR_VOCAB)
     vocab = ", ".join(f"'{a}'" for a in _ANCHOR_VOCAB)
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     qvals = ", ".join(
         f"({qid}, '{t}')" for qid, ts in BM25F_QUERIES.items() for t in ts
     )
@@ -661,7 +657,7 @@ exb AS MATERIALIZED (
 ),
 tfb AS (SELECT doc_id, term, count(*) AS tfb FROM exb GROUP BY doc_id, term),
 dlb AS (SELECT doc_id, sum(tfb)::BIGINT AS dlb FROM tfb GROUP BY doc_id),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS (SELECT * FROM e0 WHERE src <> dst),
 exa AS MATERIALIZED (
   SELECT dst AS doc_id,
@@ -998,15 +994,11 @@ def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ndcg_eval_sql() -> str:
-    from .graph import _ANCHOR_VOCAB, _GEN_EXPRS
+    from .graph import _ANCHOR_VOCAB, _EDGES_SQL
 
     tok = TOKENS_SQL.format(c="text")
     v = len(_ANCHOR_VOCAB)
     vocab = ", ".join(f"'{a}'" for a in _ANCHOR_VOCAB)
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     qvals = ", ".join(
         f"({qid}, '{t}')" for qid, ts in BM25F_QUERIES.items() for t in ts
     )
@@ -1025,7 +1017,7 @@ q(query_id, term) AS (VALUES {qvals}),
 qs(query_id, n_terms) AS (VALUES {qsizes}),
 wt(rank, w) AS (VALUES {wvals}),
 pf(i, p) AS (VALUES {pvals}),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS (SELECT * FROM e0 WHERE src <> dst),
 pres AS (
   SELECT DISTINCT doc_id, term FROM (

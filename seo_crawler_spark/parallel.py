@@ -25,17 +25,21 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 
 def _inherit(thunk):
     """Wrap ``thunk`` so its driver thread inherits the caller's JVM
-    local properties (job group/description) and, given the active
-    session, its job tags. Wrapping captures them at call time, so
-    this must run on the caller's thread."""
-    session = SparkSession.getActiveSession()
-    if session is None:
-        return inheritable_thread_target(thunk)
+    local properties (job group/description) and job tags, re-added
+    inside the member. Wrapping captures them at call time, so this
+    must run on the caller's thread. The tags are read through the
+    active-or-default session: a member thread has no active session of
+    its own, and a nested ``run_parallel`` must still pass them on."""
+    try:
+        session = SparkSession.active()
+    except PySparkRuntimeError:  # no Spark session: nothing to inherit
+        return thunk
     return inheritable_thread_target(session)(thunk)
 
 

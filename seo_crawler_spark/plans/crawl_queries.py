@@ -953,16 +953,12 @@ def focused_crawl_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def focused_crawl_priority_sql() -> str:
-    from ..operators.graph import _GEN_EXPRS
+    from ..operators.graph import _EDGES_SQL
     from ..operators.textstats import quality_scores_sql
 
-    gens = " UNION ALL ".join(
-        f"SELECT doc_id AS src, {frag} AS dst FROM documents"
-        for _, frag in _GEN_EXPRS
-    )
     return f"""
 WITH n AS (SELECT count(*) AS c FROM documents),
-e0 AS ({gens}),
+e0 AS ({_EDGES_SQL}),
 e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
 q AS MATERIALIZED (SELECT doc_id, quality_score FROM ({quality_scores_sql()})),
 par AS (

@@ -74,10 +74,17 @@ def test_zero_thunks_give_empty_list():
 
 def test_members_inherit_job_tags(spark):
     # a tag set on the caller's thread must reach every member thread,
-    # so jobs the members submit are cancellable by that tag
+    # so jobs the members submit are cancellable by that tag — also the
+    # members of a run_parallel called inside a member (those threads
+    # have no active session of their own)
     spark.addTag("run-parallel-tag")
     try:
         tags = run_parallel(spark.getTags, spark.getTags)
+        nested = run_parallel(
+            lambda: run_parallel(spark.getTags, spark.getTags),
+            lambda: run_parallel(spark.getTags, spark.getTags),
+        )
     finally:
         spark.removeTag("run-parallel-tag")
     assert all("run-parallel-tag" in t for t in tags)
+    assert all("run-parallel-tag" in t for pair in nested for t in pair)
