@@ -1,17 +1,20 @@
 """Per-wave metrics + per-partition lineage (north rule: "per-partition
 lineage + fetch metrics written each micro-batch").
 
-Two surfaces:
+Three surfaces:
   * ``observe()`` named metrics on the extraction output — collected by
     a QueryExecution observation without a separate job;
-  * a per-partition lineage table (wave, stage, partition_id, rows) so
-    skew is visible per micro-batch — the Spark-native replacement for
-    the reference's memory profiler (src/core/memory_profiler.py:66-100).
+  * a per-partition lineage table (partition_id, rows), filed under
+    each wave's metric, so skew is visible per micro-batch — the
+    Spark-native replacement for the reference's memory profiler
+    (src/core/memory_profiler.py:66-100);
+  * the JVM's generated-code compile count, so a wave that recompiles
+    Spark's generated Java shows in its metric.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 FETCH_METRICS = (
@@ -38,16 +41,19 @@ def observe_fetch(extracted: DataFrame) -> tuple[DataFrame, Observation]:
     return out, obs
 
 
-def partition_lineage(df: DataFrame, wave: int, stage: str) -> DataFrame:
-    """(wave, stage, partition_id, rows) — one row per partition."""
+def partition_lineage(df: DataFrame) -> DataFrame:
+    """(partition_id, rows) — one row per partition. No wave column: a
+    per-wave literal would make the crawl compile new code every wave."""
     return (
         df.select(F.spark_partition_id().alias("partition_id"))
         .groupBy("partition_id")
         .agg(F.count(F.lit(1)).alias("rows"))
-        .select(
-            F.lit(wave).alias("wave"),
-            F.lit(stage).alias("stage"),
-            "partition_id",
-            "rows",
-        )
     )
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles so far in the driver JVM (Spark's CodegenMetrics;
+    under a local master the executors share that JVM). A steady crawl
+    wave compiles none: its classes are all in the codegen cache."""
+    cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()

@@ -447,7 +447,7 @@ class CrawlEngine:
         seen = None
         n_frontier = frontier.count()  # only upfront count; tracked after
 
-        from ..metrics import observe_fetch, partition_lineage
+        from ..metrics import codegen_compiles, observe_fetch, partition_lineage
 
         final_status = "completed"
         while wave < cfg.max_waves and crawled_total < cfg.max_urls:
@@ -467,6 +467,17 @@ class CrawlEngine:
             if req in ("pause", "stop"):
                 final_status = "paused" if req == "pause" else "stopped"
                 break
+            compiles0 = codegen_compiles(spark)
+
+            def _close_wave() -> None:
+                # marks the last phase, then counts the wave's Janino
+                # compiles (0 on a steady wave) while the metric can
+                # still change: commit_wave serializes it after this hook
+                _mark("snapshot")
+                metrics[-1]["codegen_compiles"] = (
+                    codegen_compiles(spark) - compiles0
+                )
+
             n_front_wave = n_frontier
             seen_df = seen_parts[0]
             for p in seen_parts[1:]:
@@ -579,7 +590,6 @@ class CrawlEngine:
                     F.coalesce(wave_corpus.content_type, F.lit("")).alias("content_type"),
                     F.coalesce(wave_corpus["size"], F.lit(0)).alias("size"),
                     scheduled.depth,
-                    F.lit(wave).alias("wave"),
                     scheduled.seq,
                     scheduled.host,
                     F.coalesce(wave_corpus.response_time_ms, F.lit(0.0)).alias(
@@ -602,7 +612,13 @@ class CrawlEngine:
                 )
             )
 
-            extracted, fetch_obs = observe_fetch(extract_pages(fetched, base_domain))
+            # the crawl wave is written by extract_pages' Python function,
+            # not projected here: never F.lit(<per-wave value>) in a wave
+            # frame. Spark inlines int literals into generated Java, so
+            # each wave number would compile new classes every wave.
+            extracted, fetch_obs = observe_fetch(
+                extract_pages(fetched, base_domain, wave=wave)
+            )
             extracted = extracted.transform(local_ckpt)  # materializes obs
             pages_parts.append(extracted)
             # NOT checkpointed: a map-only explode over the checkpointed
@@ -643,6 +659,9 @@ class CrawlEngine:
                     U.canonicalize_url(F.col("target_url")).alias("url"),
                     F.col("source_url"),
                     (F.col("src_depth") + 1).alias("depth"),
+                    # wave + 1 from data, not F.lit(wave + 1): see the
+                    # extract_pages call above
+                    (F.col("wave") + 1).alias("wave"),
                     F.col("src_seq"),
                     F.col("anchor_pos"),
                 )
@@ -671,9 +690,9 @@ class CrawlEngine:
             )
             next_seq += n_new
             if n_new:
-                new_seen = fresh.select(
-                    "url_hash", "url", F.lit(wave + 1).alias("wave")
-                )
+                # "wave" is cand's data column (source wave + 1): never
+                # F.lit(wave + 1) here, it would compile new code per wave
+                new_seen = fresh.select("url_hash", "url", "wave")
                 seen_parts.append(new_seen)
                 wave_deltas.append(new_seen)
                 if bloom is not None:
@@ -682,8 +701,7 @@ class CrawlEngine:
                     )
                 if crawled_total < cfg.max_urls:
                     new_frontier = fresh.select(
-                        "url", "url_hash", "host", "depth",
-                        F.lit(wave + 1).alias("wave"), "seq",
+                        "url", "url_hash", "host", "depth", "wave", "seq"
                     )
                 else:
                     n_new = 0  # nothing scheduled; discoveries recorded in seen
@@ -703,8 +721,7 @@ class CrawlEngine:
             # north rule: per-partition lineage + fetch metrics each wave
             if (cfg.politeness_budget is None and trap_col is None) or truncated:
                 lineage_rows = [
-                    {"partition_id": r["partition_id"], "rows": r["rows"]}
-                    for r in partition_lineage(scheduled, wave, "scheduled").collect()
+                    r.asDict() for r in partition_lineage(scheduled).collect()
                 ]
             fetch_stats = {
                 k: (float(v) if v is not None else None)
@@ -749,10 +766,10 @@ class CrawlEngine:
                     delta = spark.createDataFrame([], seen_parts[0].schema)
                 self._snapshot(
                     wave, frontier, delta, extracted, wave_links, metrics[-1],
-                    on_data_written=lambda: _mark("snapshot"),
+                    on_data_written=_close_wave,
                 )
             else:
-                _mark("snapshot")
+                _close_wave()
             wave += 1
 
         if self.state_dir:

@@ -147,3 +147,36 @@ def test_politeness_budget_respected(spark, corpus_df, robots_df):
     assert {r["url"] for r in got.seen.collect()} == {
         r["url"] for r in ref.seen.collect()
     }
+
+
+def test_steady_waves_compile_no_classes(spark, corpus_df, robots_df, tmp_path):
+    """From wave 3 on, a crawl wave compiles no generated Java: its plans
+    carry no per-wave literal, the codegen cache holds the wave's working
+    set and class names carry no stage id. A 1 s wave budgets every host
+    to one page, so wave 1 is the first to defer and wave 2 the first to
+    schedule from a deferred ∪ new frontier; from then on each wave has
+    the same plan shape. Counted between control polls, so the snapshot
+    commit is included, and checked against the ``codegen_compiles``
+    each wave's metric records and persists."""
+    from seo_crawler_spark.metrics import codegen_compiles
+    from seo_crawler_spark.state.snapshots import SnapshotStore
+
+    polls: list[int] = []
+    state = str(tmp_path / "state")
+    cfg = CrawlConfig(
+        max_depth=3, max_urls=10_000, politeness_budget=1, wave_seconds=1.0,
+        max_waves=6,
+    )
+    engine = CrawlEngine(spark, corpus_df, robots_df, cfg, state_dir=state)
+    engine.control = lambda: polls.append(codegen_compiles(spark))
+    res = engine.run(seed_urls(N_HOSTS))
+    polls.append(codegen_compiles(spark))
+
+    per_wave = [b - a for a, b in zip(polls, polls[1:])]
+    assert len(res.metrics) == len(per_wave) == 6, per_wave
+    assert per_wave[3:] == [0, 0, 0], per_wave
+    recorded = [m["codegen_compiles"] for m in res.metrics]
+    assert recorded[3:] == [0, 0, 0], recorded
+    assert all(0 <= r <= p for r, p in zip(recorded, per_wave)), (recorded, per_wave)
+    stored = SnapshotStore(state).metrics()
+    assert [m["codegen_compiles"] for m in stored] == recorded
