@@ -48,9 +48,9 @@ def get_spark(
         # Generated-code cache (a static conf: it only takes effect when
         # the session is built). A crawl wave's working set is ~130
         # classes, over the default 100 entries, so the LRU thrashed: a
-        # 20-page crawl wave recompiled 75-97 classes every wave, 180 of
-        # a 3-wave crawl's 309 compiles being classes it had already
-        # compiled, and Janino took 26% of the JVM's CPU samples.
+        # 20-page crawl wave recompiled 75-97 classes every wave, and
+        # 180 of a 3-wave crawl's 309 compiles were of classes it had
+        # already compiled.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
         # Keep the codegen stage id out of generated class names. The
         # crawl's seen delta union grows by one part per wave, which
