@@ -102,29 +102,22 @@ _EMPTY_FIELDS = {
 }
 
 
-def extract_pages(
-    fetched: DataFrame, base_domain: str, wave: int | None = None
-) -> DataFrame:
+def extract_pages(fetched: DataFrame, base_domain: str, wave: int = 0) -> DataFrame:
     """fetched(url, raw_html, status_code, content_type, size, depth,
-    wave, seq, host, response_time, error) → extracted page rows.
+    seq, host, response_time, error) → extracted page rows of crawl
+    ``wave``, which the Python function writes on every row.
 
     Non-HTML / error / empty-body rows become empty-result pages
     (reference: seo_extractor.create_empty_result + the HTML-only parse
     gate at crawler.py:870).
-
-    ``wave``, when given, is written on every page row by the Python
-    function and ``fetched`` needs no ``wave`` column. The crawl loop
-    passes it this way because Spark inlines an int ``F.lit(wave)`` into
-    generated Java, so a per-wave literal compiles new classes every wave.
     """
-    fixed = {} if wave is None else {"wave": wave}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_rows = []
             for row in pdf.itertuples(index=False):
                 base = {
-                    name: fixed[name] if name in fixed else getattr(row, name)
+                    name: wave if name == "wave" else getattr(row, name)
                     for name, _t in _PASSTHROUGH
                 }
                 html = getattr(row, "raw_html", None)
@@ -141,7 +134,7 @@ def extract_pages(
                 out_rows.append({**base, **fields})
             yield pd.DataFrame(out_rows)
 
-    cols = [n for n, _t in _PASSTHROUGH if n not in fixed] + ["raw_html"]
+    cols = [n for n, _t in _PASSTHROUGH if n != "wave"] + ["raw_html"]
     return fetched.select(*cols).mapInPandas(run, schema=EXTRACTED_SCHEMA)
 
 

@@ -659,8 +659,7 @@ class CrawlEngine:
                     U.canonicalize_url(F.col("target_url")).alias("url"),
                     F.col("source_url"),
                     (F.col("src_depth") + 1).alias("depth"),
-                    # wave + 1 from data, not F.lit(wave + 1): see the
-                    # extract_pages call above
+                    # not F.lit(wave + 1): see the extract_pages call above
                     (F.col("wave") + 1).alias("wave"),
                     F.col("src_seq"),
                     F.col("anchor_pos"),
@@ -690,8 +689,7 @@ class CrawlEngine:
             )
             next_seq += n_new
             if n_new:
-                # "wave" is cand's data column (source wave + 1): never
-                # F.lit(wave + 1) here, it would compile new code per wave
+                # "wave" is cand's (source wave + 1): see the extract_pages call
                 new_seen = fresh.select("url_hash", "url", "wave")
                 seen_parts.append(new_seen)
                 wave_deltas.append(new_seen)

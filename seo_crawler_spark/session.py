@@ -50,8 +50,11 @@ def get_spark(
         # classes, over the default 100 entries, so the LRU thrashed: a
         # 20-page crawl wave recompiled 75-97 classes every wave, and
         # 180 of a 3-wave crawl's 309 compiles were of classes it had
-        # already compiled.
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # already compiled. 512 holds that set with room to spare (a
+        # 20-page-per-wave crawl compiles ~170 distinct classes in all,
+        # inputs and output checks included) and bounds what a long-lived
+        # session keeps.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
         # Keep the codegen stage id out of generated class names. The
         # crawl's seen delta union grows by one part per wave, which
         # shifts the stage id of every later stage: with the id in the

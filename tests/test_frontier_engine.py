@@ -158,10 +158,9 @@ def test_steady_waves_compile_no_classes(spark, corpus_df, robots_df, tmp_path):
     the same plan shape. Counted between control polls, so the snapshot
     commit is included, and checked against the ``codegen_compiles``
     each wave's metric records and persists."""
+    from seo_crawler_spark.metrics import codegen_compiles
     from seo_crawler_spark.state.snapshots import SnapshotStore
 
-    jvm = spark.sparkContext._jvm
-    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     polls: list[int] = []
     state = str(tmp_path / "state")
     cfg = CrawlConfig(
@@ -169,9 +168,9 @@ def test_steady_waves_compile_no_classes(spark, corpus_df, robots_df, tmp_path):
         max_waves=6,
     )
     engine = CrawlEngine(spark, corpus_df, robots_df, cfg, state_dir=state)
-    engine.control = lambda: polls.append(compiles.getCount())
+    engine.control = lambda: polls.append(codegen_compiles(spark))
     res = engine.run(seed_urls(N_HOSTS))
-    polls.append(compiles.getCount())
+    polls.append(codegen_compiles(spark))
 
     per_wave = [b - a for a, b in zip(polls, polls[1:])]
     assert len(res.metrics) == len(per_wave) == 6, per_wave
