@@ -51,6 +51,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from seo_crawler_spark.ckpt import release_scope
     from seo_crawler_spark.operators.frontier import CrawlConfig, CrawlEngine
     from seo_crawler_spark.sources.corpus import (
         generate_corpus,
@@ -75,76 +76,46 @@ def entry(spark: SparkSession) -> DataFrame:
         except Exception:
             prior[k] = None
         spark.conf.set(k, v)
-    # CALLER-owned persisted state present before the crawl starts —
-    # never unpersist these (a caller's localCheckpointed frame has no
-    # lineage to recompute from; dropping its blocks is data loss)
     try:
-        baseline_ids = set(
-            spark.sparkContext._jsc.getPersistentRDDs().keys()
-        )
-    except Exception:
-        baseline_ids = set()
-    try:
-        n_docs = min(load(spark, "documents", SF0001).count(), 300)
-        corpus = generate_corpus(
-            spark, n_docs=n_docs, n_hosts=5, seed=42
-        ).localCheckpoint(eager=True)
-        robots = generate_robots(spark, n_hosts=5, seed=42)
-        result = CrawlEngine(
-            spark,
-            corpus,
-            robots,
-            CrawlConfig(
-                max_depth=3,
-                max_urls=200,
-                crawl_external=True,  # multi-host: politeness + skew paths
-                politeness_budget=40,
-                salt_buckets=2,
-            ),
-        ).run(seed_urls(5))
+        # the crawl's checkpoint blocks are released once the histogram
+        # is collected; the caller's persisted state is not touched
+        with release_scope(spark):
+            n_docs = min(load(spark, "documents", SF0001).count(), 300)
+            corpus = generate_corpus(
+                spark, n_docs=n_docs, n_hosts=5, seed=42
+            ).localCheckpoint(eager=True)
+            robots = generate_robots(spark, n_hosts=5, seed=42)
+            result = CrawlEngine(
+                spark,
+                corpus,
+                robots,
+                CrawlConfig(
+                    max_depth=3,
+                    max_urls=200,
+                    crawl_external=True,  # multi-host: politeness + skew paths
+                    politeness_budget=40,
+                    salt_buckets=2,
+                ),
+            ).run(seed_urls(5))
 
-        agg = result.pages.groupBy("status_code").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        total = Window.partitionBy()
-        # ids persisted by the crawl (about to be released): everything
-        # present BEFORE out's own checkpoint is engine state
-        try:
-            engine_ids = set(
-                spark.sparkContext._jsc.getPersistentRDDs().keys()
+            agg = result.pages.groupBy("status_code").agg(
+                F.count(F.lit(1)).alias("cnt")
             )
-        except Exception:
-            engine_ids = set()
-        out = (
-            agg.withColumn(
+            total = Window.partitionBy()
+            hist = agg.withColumn(
                 "pct",
                 F.round(F.col("cnt") * 100.0 / F.sum("cnt").over(total), 2),
-            )
-            .orderBy("status_code")
-            # freeze the plan under the scoped conf (tiny: one row per
-            # distinct status code) so the post-restore collect doesn't
-            # replan under the caller's settings
-            .localCheckpoint(eager=True)
-        )
+            ).orderBy("status_code")
+            # collected under the scoped conf (one row per distinct
+            # status code), so the result outlives the crawl's blocks
+            rows = hist.collect()
     finally:
         for k, v in prior.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    # release the crawl's localCheckpoint blocks — only ids created by
-    # THIS call (after baseline, before out's checkpoint); `out`'s own
-    # checkpoint and any caller-owned pre-existing state both stay
-    # (the bench/driver_sim unpersist discipline)
-    try:
-        for rid, rdd in list(
-            spark.sparkContext._jsc.getPersistentRDDs().items()
-        ):
-            if rid in engine_ids and rid not in baseline_ids:
-                rdd.unpersist(False)
-    except Exception:
-        pass  # py4j surface absent (Spark Connect): blocks just persist
-    return out
+    return spark.createDataFrame(rows, hist.schema)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

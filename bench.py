@@ -7,8 +7,8 @@ Headline queries run at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS]; the frontier-scheduling bench (the
 north-rule metric: URLs scheduled+deduped/sec) runs over a
 deterministically synthesized skewed frontier (column exprs only).
-Scaling evidence (local[8] vs local[32]) lives in
-scripts/bench_scaling.py → BENCH/BASELINE.md.
+Scaling evidence (local[1] vs local[4]) comes from
+`scripts/sweep.py scaling`.
 """
 
 from __future__ import annotations
@@ -99,9 +99,7 @@ def build_seen(raw):
 def sched_pipeline(raw, seen):
     """ONE timed run of the north-rule hot loop from raw URLs:
     canonicalize → xxhash → seen anti-join → salted politeness rank.
-    Shared by this bench and scripts/bench_frontier_scale.py so the
-    linearity evidence measures the identical plan. Returns
-    (seconds, {admitted: n, deferred: n})."""
+    Returns (seconds, {admitted: n, deferred: n})."""
     from pyspark.sql import functions as F
 
     from seo_crawler_spark.operators.politeness import politeness_tag
@@ -307,6 +305,7 @@ HEADLINE = [
 
 
 def main() -> int:
+    from seo_crawler_spark.ckpt import release_scope
     from seo_crawler_spark.session import get_spark
 
     spark = get_spark("bench", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS))
@@ -317,7 +316,8 @@ def main() -> int:
     qs = entry_mod.queries()
     load_before = os.getloadavg()
     # warm codegen/JVM so the first timed query isn't charged for startup
-    qs[HEADLINE[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    with release_scope(spark):
+        qs[HEADLINE[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
     # cold run + median-of-3 steady runs per query (VERDICT r3 #4):
     # the cold run pays whole-stage-codegen JIT for that query's plan
     # shapes — a per-process constant, not per-data cost — so the
@@ -332,21 +332,17 @@ def main() -> int:
             continue
         runs = []
         for _ in range(4):
-            t0 = time.monotonic()
-            qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            runs.append(time.monotonic() - t0)
-            spark.catalog.clearCache()  # some plans cache intermediates
             # localCheckpoint blocks are NOT released by clearCache and
-            # accumulate across the suite (measured: steady > cold by
-            # 5-8x on checkpoint-heavy queries once ~80 queries of
-            # blocks pile up — storage-memory eviction churn). Each rep
-            # fully materialized via the noop write, so dropping every
-            # persisted RDD here is safe and models the real deployment
-            # (one job per query, not one JVM hoarding 84 jobs' state).
-            for rdd in list(
-                spark.sparkContext._jsc.getPersistentRDDs().values()
-            ):
-                rdd.unpersist(False)
+            # would accumulate across the suite (measured: steady > cold
+            # by 5-8x on checkpoint-heavy queries once ~80 queries of
+            # blocks pile up — storage-memory eviction churn). The noop
+            # write fully materializes each rep, so its scope releases
+            # the blocks it made, outside the timed region.
+            with release_scope(spark):
+                t0 = time.monotonic()
+                qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+                runs.append(time.monotonic() - t0)
+            spark.catalog.clearCache()  # some plans cache intermediates
         cold[name] = round(runs[0], 3)
         timings[name] = round(_median(runs[1:]), 3)
         cvs[name] = _cv(runs[1:])
@@ -357,11 +353,12 @@ def main() -> int:
     # across rounds.
     from seo_crawler_spark.operators.dedup import dedup_minhash_lsh
 
-    t0 = time.monotonic()
-    dedup_minhash_lsh(spark, SF_DIR, use_xxhash=True).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    extra = {"dedup_minhash_lsh_xxh": round(time.monotonic() - t0, 3)}
+    with release_scope(spark):
+        t0 = time.monotonic()
+        dedup_minhash_lsh(spark, SF_DIR, use_xxhash=True).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        extra = {"dedup_minhash_lsh_xxh": round(time.monotonic() - t0, 3)}
     spark.catalog.clearCache()
 
     fb = frontier_bench(spark)

@@ -120,6 +120,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from seo_crawler_spark.ckpt import release_scope
+
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
@@ -147,15 +149,12 @@ def main() -> int:
     for name, q in qs.items():
         if only is not None and name not in only:
             continue
-        sdf = q(spark, SF_ORACLE)
-        scols = [c.lower() for c in sdf.columns]
-        srows = [tuple(r) for r in sdf.collect()]
-        # drop checkpoint blocks between queries: 145 sequential plans
-        # would otherwise hoard every query's localCheckpoint state
-        for rdd in list(
-            spark.sparkContext._jsc.getPersistentRDDs().values()
-        ):
-            rdd.unpersist(False)
+        # release each query's checkpoint blocks once it is collected:
+        # 145 sequential plans would otherwise hoard all of their state
+        with release_scope(spark):
+            sdf = q(spark, SF_ORACLE)
+            scols = [c.lower() for c in sdf.columns]
+            srows = [tuple(r) for r in sdf.collect()]
         if name not in oracles:
             print(f"{name}: rows={len(srows)} (rows-only, no oracle)")
             report[name] = {"rows": len(srows), "match": None}

@@ -1,4 +1,5 @@
-"""Stats-safe local checkpointing for iterative plans.
+"""Stats-safe local checkpointing for iterative plans, and
+:func:`release_scope`, the one place that releases checkpoint blocks.
 
 ``DataFrame.localCheckpoint`` truncates lineage but — by design, to keep
 broadcast decisions stable — the resulting ``LogicalRDD`` INHERITS the
@@ -46,7 +47,10 @@ at bench scale and a sound trade at any scale against a hung driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def local_ckpt(df: DataFrame) -> DataFrame:
@@ -96,3 +100,28 @@ def _stats_free_rebuild(spark, jdf):
     return spark._jsparkSession.internalCreateDataFrame(
         jdf.queryExecution().toRdd(), jdf.schema(), False
     )
+
+
+def _persisted(spark: SparkSession) -> dict:
+    try:
+        return dict(spark.sparkContext._jsc.getPersistentRDDs())
+    except AttributeError:  # Spark Connect: no JVM handle to list them
+        return {}
+
+
+@contextmanager
+def release_scope(spark: SparkSession) -> Iterator[None]:
+    """Unpersist, on exit, exactly the RDDs persisted inside the scope.
+
+    The one owner of checkpoint blocks: a query or crawl run inside the
+    scope leaves none behind once the caller has materialized what it
+    needs from them, and RDDs persisted before the scope (a caller's
+    localCheckpointed frame has no lineage to recompute from) are never
+    touched. Without the py4j surface (Spark Connect) the blocks stay."""
+    before = _persisted(spark).keys()
+    try:
+        yield
+    finally:
+        for rid, rdd in _persisted(spark).items():
+            if rid not in before:
+                rdd.unpersist(False)

@@ -47,6 +47,15 @@ from .politeness import politeness_tag, template_cap_tag
 from .seen import bloom_build, bloom_merge, dedupe_against_seen
 
 
+# fold the seen delta-part list into one checkpointed base whenever it
+# reaches this many parts: the per-wave anti-join scans a lazy union of
+# O(parts) deltas, so at thousands of waves the union node itself
+# dominates planning/scheduling. Folding costs one O(|seen|) copy per K
+# waves (amortized |seen|/K per wave) and bounds plan depth at K.
+# Mirrors the on-disk compact_seen.
+SEEN_FOLD_EVERY = 16
+
+
 @dataclass
 class CrawlConfig:
     """Mirrors the reference's crawler config defaults (crawler.py:95-135)."""
@@ -86,13 +95,6 @@ class CrawlConfig:
     # crawl-row timestamp for status transitions (no wall clock inside
     # the engine — callers pass it, reference crawl_db rows carry it)
     started_at: str | None = None
-    # fold the seen delta-part list into one checkpointed base whenever
-    # it reaches this many parts: the per-wave anti-join scans a lazy
-    # union of O(parts) deltas, so at thousands of waves the union node
-    # itself dominates planning/scheduling. Folding costs one O(|seen|)
-    # copy per K waves (amortized |seen|/K per wave) and bounds plan
-    # depth at K. Mirrors the on-disk compact_seen.
-    seen_fold_every: int = 16
 
 
 @dataclass
@@ -352,6 +354,7 @@ class CrawlEngine:
             row = df.agg(F.max("seq").alias("m")).collect()[0]
             if row["m"] is not None:
                 max_seq = max(max_seq, row["m"])
+        refreshed_seen = None
         if recrawl_before_wave is not None:
             # a URL can be seen (discovered) but still pending in the
             # frontier — re-enqueuing it would fetch it twice; only
@@ -398,18 +401,6 @@ class CrawlEngine:
                 eager=True
             )
             max_seq += n_refresh
-            return self._execute(
-                base_domain=base_domain,
-                frontier=frontier,
-                seen=seen,
-                next_seq=max_seq + 1,
-                crawled_total=crawled_total,
-                start_wave=latest + 1,
-                pages_parts=[pages],
-                links_parts=[links],
-                metrics=list(metrics),
-                initial_seen_delta=refreshed_seen,
-            )
         return self._execute(
             base_domain=base_domain,
             frontier=frontier,
@@ -420,6 +411,7 @@ class CrawlEngine:
             pages_parts=[pages],
             links_parts=[links],
             metrics=list(metrics),
+            initial_seen_delta=refreshed_seen,
         )
 
     def _execute(
@@ -742,14 +734,14 @@ class CrawlEngine:
                     "phases": phases,
                 }
             )
-            # in-memory seen compaction (cfg.seen_fold_every): collapse
+            # in-memory seen compaction (SEEN_FOLD_EVERY): collapse
             # the delta-part list into one checkpointed base so a long
             # run's anti-join plan stays K-deep instead of O(waves)-deep.
             # Runs BEFORE the snapshot (it only touches seen_parts, which
             # the snapshot doesn't read) so the persisted manifest metric
             # carries ALL five phase timings — only the manifest write
             # itself (ms) is unattributed.
-            if len(seen_parts) >= cfg.seen_fold_every:
+            if len(seen_parts) >= SEEN_FOLD_EVERY:
                 folded = seen_parts[0]
                 for p in seen_parts[1:]:
                     folded = folded.unionByName(p)

@@ -29,9 +29,8 @@ def politeness_tag(
     order_by: tuple[str, ...] = ("seq",),
     eligible: str | None = None,
 ) -> DataFrame:
-    """Tag frontier rows with ``admitted`` under per-host budgets —
-    the primitive (single pass; lets callers count both sides in one
-    job). :func:`politeness_gate` filters this into the two-frame split.
+    """Tag frontier rows with ``admitted`` under per-host budgets in a
+    single pass, so callers count both sides in one job.
 
     Budget per host = floor(wave_seconds / crawl_delay) when robots has a
     crawl_delay for the host, else ``default_budget``. Admission order
@@ -83,24 +82,6 @@ def politeness_tag(
     if "__rbudget" in df.columns:
         df = df.drop("__rbudget")
     return df.withColumnRenamed("__admit", "admitted")
-
-
-def politeness_gate(
-    frontier: DataFrame,
-    default_budget: int,
-    robots: DataFrame | None = None,
-    wave_seconds: float = 60.0,
-    salt_buckets: int = 1,
-    order_by: tuple[str, ...] = ("seq",),
-) -> tuple[DataFrame, DataFrame]:
-    """Split frontier into (scheduled, deferred) under per-host budgets
-    (filtered view over :func:`politeness_tag`)."""
-    df = politeness_tag(
-        frontier, default_budget, robots, wave_seconds, salt_buckets, order_by
-    )
-    scheduled = df.filter(F.col("admitted")).drop("admitted")
-    deferred = df.filter(~F.col("admitted")).drop("admitted")
-    return scheduled, deferred
 
 
 def host_budget(crawl_delay: float, wave_seconds: float = 60.0) -> int:

@@ -67,7 +67,8 @@ N_SIG_BUCKETS = 32
 # hash bucket; the verify join reads only buckets holding candidate
 # partners (bounded ≤ N_DOC_BUCKETS-row collect of candidates'
 # distinct buckets). Without this the verify scan is O(total state)
-# per batch — measured as the linear term in bench_stream_dedup.py.
+# per batch — measured as the linear term in the streaming-dedup run
+# recorded in BENCH/BASELINE.md.
 N_DOC_BUCKETS = 32
 
 

@@ -42,6 +42,7 @@ _SHARD_COST: dict[str, float] = {
     "test_dedup_cap.py": 15.7,
     "test_canonicalize_native.py": 14.7,
     "test_driver_sim_smoke.py": 13.2,
+    "test_sweep_smoke.py": 53.4,
     "test_filesize_gate.py": 13.0,
     "test_sitemap.py": 11.7,
     "test_kmeans.py": 30.0,

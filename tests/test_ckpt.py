@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from seo_crawler_spark.ckpt import local_ckpt
+from seo_crawler_spark.ckpt import local_ckpt, release_scope
 
 
 def _bits(df) -> int:
@@ -102,3 +102,26 @@ def test_local_ckpt_fallback_join_loop_stays_correct(spark, monkeypatch):
             safe.select("k", "s").join(safe.select("k"), "k")
         )
     assert safe.count() == 100
+
+
+def test_release_scope_releases_only_what_it_persisted(spark):
+    """Blocks persisted inside the scope are gone after it; a frame
+    localCheckpointed before the scope (no lineage to recompute from)
+    is still readable."""
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    caller = spark.range(50).select((F.col("id") * 2).alias("v"))
+    caller = caller.localCheckpoint(eager=True)
+    before = persisted()
+    with release_scope(spark):
+        inner = local_ckpt(spark.range(20))
+        inner = local_ckpt(inner.select((F.col("id") + 1).alias("id")))
+        assert inner.count() == 20
+        made = persisted() - before
+        assert len(made) == 2
+    assert not made & persisted()
+    assert before <= persisted()
+    assert caller.agg(F.sum("v")).collect()[0][0] == 2450
+
