@@ -111,7 +111,7 @@ def sched_pipeline(raw, seen):
         .withColumn("depth", F.lit(1))
         .withColumn("wave", F.lit(1))
     )
-    fresh = dedupe_against_seen(cand, seen, None)
+    fresh = dedupe_against_seen(cand, seen)
     tagged = politeness_tag(fresh, default_budget=5000, salt_buckets=8)
     counts = {
         bool(r["admitted"]): r["n"]
@@ -123,16 +123,12 @@ def sched_pipeline(raw, seen):
 
 
 def frontier_bench(spark) -> dict:
-    from pyspark.sql import functions as F
-
-    from seo_crawler_spark.operators.seen import bloom_build, dedupe_against_seen
-
     raw = synth_raw_frontier(spark, FRONTIER_N).localCheckpoint(eager=True)
     seen = build_seen(raw)
 
-    # primary timed path = sched_pipeline (exact anti-join: what the
-    # engine picks at this seen size — bloom pays off when |seen| dwarfs
-    # candidates and lives bucketed on disk; measured separately below).
+    # timed path = sched_pipeline with the plain anti-join: the seen
+    # table here is a third of the candidate count, where the engine never
+    # prefilters (scripts/sweep.py seen measures both plans by |seen|).
     # cold + median-of-5 + CV (VERDICT r3 #4): run 1 pays codegen JIT,
     # and this sandbox VM suffers multi-second noisy-neighbor bursts
     # (measured: back-to-back identical runs swing 2.8s..10.4s on an
@@ -147,24 +143,6 @@ def frontier_bench(spark) -> dict:
     dt = _median(reps)
     n_sched, n_def = counts.get(True, 0), counts.get(False, 0)
 
-    # secondary: bloom-path numbers (build once + probe per wave)
-    cand = (
-        canonicalize_stage(raw)
-        .withColumn("depth", F.lit(1))
-        .withColumn("wave", F.lit(1))
-    )
-    tb0 = time.monotonic()
-    bloom = bloom_build(seen).localCheckpoint(eager=True)
-    bloom_build_sec = time.monotonic() - tb0
-    # steady-state probe cost: in the real wave loop the Python workers
-    # persist across waves, so time a warm probe (first run pays ~3s of
-    # one-time worker startup that a per-wave metric shouldn't carry)
-    dedupe_against_seen(cand, seen, bloom).count()
-    tb1 = time.monotonic()
-    n_bloom = dedupe_against_seen(cand, seen, bloom).count()
-    bloom_probe_sec = time.monotonic() - tb1
-    assert n_bloom == n_sched + n_def, (n_bloom, n_sched, n_def)
-
     return {
         "frontier_n": FRONTIER_N,
         "frontier_scheduled": n_sched,
@@ -173,8 +151,6 @@ def frontier_bench(spark) -> dict:
         "frontier_sec_cv": _cv(reps),
         "frontier_sec_cold": round(cold_sec, 3),
         "frontier_urls_per_sec": round(FRONTIER_N / dt),
-        "frontier_bloom_build_sec": round(bloom_build_sec, 3),
-        "frontier_bloom_dedupe_sec": round(bloom_probe_sec, 3),
     }
 
 

@@ -22,9 +22,11 @@ import hashlib
 import importlib.util
 import json
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")  # script lives in scripts/
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)  # script lives in scripts/
 
 import duckdb
 
@@ -113,7 +115,7 @@ def main() -> int:
             global SF_ORACLE
             SF_ORACLE = sys.argv[i + 1]
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

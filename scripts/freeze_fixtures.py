@@ -9,9 +9,11 @@ tests/test_frontier_engine.py."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from seo_crawler_spark.reference_model import ReferenceModel
 from seo_crawler_spark.sources.corpus import (
@@ -36,9 +38,9 @@ def build():
 
 def main() -> int:
     r = build()
-    with open("/root/repo/fixtures/crawl_order.json", "w") as f:
+    with open(os.path.join(REPO, "fixtures", "crawl_order.json"), "w") as f:
         json.dump([{"url": u, "depth": d} for u, d in r["order"]], f, indent=1)
-    with open("/root/repo/fixtures/seen_set.json", "w") as f:
+    with open(os.path.join(REPO, "fixtures", "seen_set.json"), "w") as f:
         json.dump(sorted(r["seen"]), f, indent=1)
     print(f"froze {len(r['order'])} ordered urls, {len(r['seen'])} seen")
     return 0

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""The two measurements BENCH/BASELINE.md cites that perfbench/ does not
+"""The measurements BENCH/BASELINE.md cites that perfbench/ does not
 cover, behind one entry point. Prints JSON lines; writes nothing into the
 repo.
 
@@ -14,11 +14,20 @@ repo.
             anti-join) with per-wave state snapshots and compact_seen +
             vacuum_seen 16 times over the run; reports the engine's own
             per-wave phases binned by decile.
+  seen      one wave's seen dedupe, plain anti-join against the
+            candidate-hash prefilter, at |seen| = 200k, 2M and 10M rows
+            on local[4]. Candidates are engine-shaped and lazy:
+            canonicalize plus a first-discovery window over a
+            checkpointed raw frame of messy links, two per URL; half the
+            URLs are already seen. Warm-up, then 4 reps of each plan in
+            alternating order. Exits 1 unless both plans count the same
+            fresh URLs, and that count is the unseen half.
 
---scale multiplies the input: at 1, scaling reads 20,000 docs and
-long_run crawls 1,560 docs for up to 520 waves.
+--scale multiplies the input: at 1, scaling reads 20,000 docs, long_run
+crawls 1,560 docs for up to 520 waves and seen dedupes 20,000 candidate
+URLs per wave.
 
-Run: python scripts/sweep.py {scaling|long_run} [--scale 1]
+Run: python scripts/sweep.py {scaling|long_run|seen} [--scale 1]
 """
 
 from __future__ import annotations
@@ -42,6 +51,9 @@ SCALING_DOCS = 20_000
 LONG_RUN_DOCS = 1_560
 LONG_RUN_WAVES = 520
 COMPACTIONS = 16
+SEEN_SIZES = (200_000, 2_000_000, 10_000_000)
+SEEN_CANDIDATES = 20_000
+SEEN_REPS = 4
 AGGREGATES = ("n_pages", "words", "n_links", "n_spans")
 _TICK = os.sysconf("SC_CLK_TCK")
 
@@ -210,8 +222,7 @@ def long_run(scale: float) -> int:
     engine = CrawlEngine(
         spark, corpus, None,
         CrawlConfig(max_depth=6, max_urls=n_docs, crawl_external=True,
-                    politeness_budget=1, max_waves=max_waves,
-                    bloom_min_seen=None),
+                    politeness_budget=1, max_waves=max_waves),
         state_dir=state_dir,
     )
     engine.control = compact
@@ -247,13 +258,126 @@ def long_run(scale: float) -> int:
     return 0
 
 
+def _messy_url(url_id, shout):
+    """A link to page ``url_id`` as some page wrote it, in one of two
+    spellings (``shout`` picks) that canonicalize to the same URL:
+    scheme/host case, default port, query order and fragment differ."""
+    from pyspark.sql import functions as F
+
+    host = F.concat(F.lit("host"), F.pmod(url_id, F.lit(200)).cast("string"))
+    page = F.concat(F.lit("/p/"), url_id.cast("string"), F.lit(".html"))
+    b = F.concat(F.lit("b="), F.pmod(url_id, F.lit(7)).cast("string"))
+    a = F.concat(F.lit("a="), F.pmod(url_id, F.lit(3)).cast("string"))
+    return F.when(
+        shout,
+        F.concat(F.lit("HTTPS://"), F.upper(host), F.lit(".Example.COM:443"),
+                 page, F.lit("?"), b, F.lit("&"), a, F.lit("#frag")),
+    ).otherwise(
+        F.concat(F.lit("https://"), host, F.lit(".example.com"), page,
+                 F.lit("?"), a, F.lit("&"), b)
+    )
+
+
+def seen_inputs(spark, n_seen: int, n_cand: int):
+    """(seen, raw): the checkpointed seen table of pages 0..n_seen-1 and
+    a checkpointed raw frame of 2 * n_cand messy links to n_cand pages,
+    the even-numbered ones spread over the seen range, the odd-numbered
+    ones past it."""
+    from pyspark.sql import functions as F
+
+    from seo_crawler_spark.ckpt import local_ckpt
+    from seo_crawler_spark.functions import urls as U
+
+    parts = max(4, n_seen // 250_000)
+    seen = spark.range(0, n_seen, numPartitions=parts).select(
+        U.canonicalize_url(_messy_url(F.col("id"), F.lit(True))).alias("url")
+    ).select(U.url_hash(F.col("url")).alias("url_hash"), "url",
+             F.lit(0).alias("wave"))
+    stride = max(1, n_seen // n_cand)
+    k = F.col("id") % n_cand  # the page this link points to
+    page = F.when(k % 2 == 0, (k * stride) % n_seen).otherwise(n_seen + k)
+    raw = spark.range(0, 2 * n_cand, numPartitions=4).select(
+        F.col("id").alias("src_seq"),
+        (F.col("id") % 50).alias("anchor_pos"),
+        _messy_url(page, F.col("id") < n_cand).alias("target_url"),
+    )
+    return local_ckpt(seen), local_ckpt(raw)
+
+
+def seen_candidates(raw):
+    """The engine's candidate plan over ``raw``, left lazy as the engine
+    leaves it: canonicalize, first discovery wins, hash."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from seo_crawler_spark.functions import urls as U
+
+    first = Window.partitionBy("url").orderBy("src_seq", "anchor_pos")
+    return (
+        raw.select(U.canonicalize_url(F.col("target_url")).alias("url"),
+                   "src_seq", "anchor_pos")
+        .withColumn("__rn", F.row_number().over(first))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+        .withColumn("url_hash", U.url_hash(F.col("url")))
+    )
+
+
+def seen(scale: float) -> int:
+    from seo_crawler_spark.ckpt import release_scope
+    from seo_crawler_spark.operators.seen import dedupe_against_seen
+
+    steal0 = _steal_ticks()
+    n_cand = max(2, round(SEEN_CANDIDATES * scale))
+    spark = _session("sweep-seen", CORES[1])
+    ok = True
+    for size in SEEN_SIZES:
+        n_seen = max(n_cand, round(size * scale))
+        with release_scope(spark):
+            t0 = time.monotonic()
+            seen_df, raw = seen_inputs(spark, n_seen, n_cand)
+            setup = time.monotonic() - t0
+            secs: dict[str, list[float]] = {"plain": [], "prefilter": []}
+            fresh: dict[str, int] = {}
+
+            def once(plan: str) -> float:
+                t = time.monotonic()
+                fresh[plan] = dedupe_against_seen(
+                    seen_candidates(raw), seen_df, prefilter=plan == "prefilter"
+                ).count()
+                return time.monotonic() - t
+
+            once("plain"), once("prefilter")  # codegen, page cache
+            for rep in range(SEEN_REPS):
+                order = ("plain", "prefilter")[::1 if rep % 2 == 0 else -1]
+                for plan in order:
+                    secs[plan].append(once(plan))
+        equal = fresh["plain"] == fresh["prefilter"] == n_cand // 2
+        ok = ok and equal
+        emit(mode="seen", seen=n_seen, candidates=n_cand,
+             setup_s=round(setup, 2),
+             plain_s=round(statistics.median(secs["plain"]), 3),
+             prefilter_s=round(statistics.median(secs["prefilter"]), 3),
+             plain_runs=[round(x, 3) for x in secs["plain"]],
+             prefilter_runs=[round(x, 3) for x in secs["prefilter"]],
+             fresh_plain=fresh["plain"], fresh_prefilter=fresh["prefilter"],
+             counts_equal=equal)
+    emit(mode="seen", scale=scale, candidates=n_cand, counts_equal=ok,
+         **_host(steal0))
+    spark.stop()
+    return 0 if ok else 1
+
+
+MODES = {"scaling": scaling, "long_run": long_run, "seen": seen}
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("mode", choices=("scaling", "long_run"))
+    ap.add_argument("mode", choices=tuple(MODES))
     ap.add_argument("--scale", type=float, default=1.0,
                     help="input size multiplier (default 1)")
     args = ap.parse_args()
-    return (scaling if args.mode == "scaling" else long_run)(args.scale)
+    return MODES[args.mode](args.scale)
 
 
 if __name__ == "__main__":

@@ -10,7 +10,7 @@ text stats, multimodal plumbing) that a 100 TB corpus needs.
 
 Everything is expressed Spark-first: DataFrame/SQL + Catalyst, with
 vectorized pandas/Arrow UDFs only where built-in operators genuinely
-cannot express the semantics (HTML parsing, bloom-filter state).
+cannot express the semantics (HTML parsing, vector and sketch kernels).
 """
 
 __version__ = "0.1.0"

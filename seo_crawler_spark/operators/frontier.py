@@ -13,7 +13,7 @@ Per wave (all DataFrame ops; the driver only sequences waves):
      │                                                              │
      └─ deferred (re-queued)               mapInPandas extraction ──┤
                                                                     ▼
-  seen ◀─ bloom+exact anti-join ◀─ admission predicate ◀─ exploded links
+  seen ◀─ exact anti-join      ◀─ admission predicate ◀─ exploded links
     │                                                               │
     └──────────▶ next frontier (ordered_seq over src_seq,anchor_pos)┘
 
@@ -44,7 +44,7 @@ from ..functions import urls as U
 from .extract import extract_pages, explode_links
 from .ordering import ordered_seq, ordered_seq_counted
 from .politeness import politeness_tag, template_cap_tag
-from .seen import bloom_build, bloom_merge, dedupe_against_seen
+from .seen import dedupe_against_seen
 
 
 # fold the seen delta-part list into one checkpointed base whenever it
@@ -54,6 +54,12 @@ from .seen import bloom_build, bloom_merge, dedupe_against_seen
 # waves (amortized |seen|/K per wave) and bounds plan depth at K.
 # Mirrors the on-disk compact_seen.
 SEEN_FOLD_EVERY = 16
+
+# dedupe through the broadcast candidate-hash prefilter once this many
+# URLs have been discovered (seen rows): it wins only once the seen
+# table dwarfs a wave's candidates, because its broadcast side runs the
+# lazy candidate plan a second time. scripts/sweep.py seen measures it.
+PREFILTER_MIN_SEEN = 2_000_000
 
 
 @dataclass
@@ -80,12 +86,6 @@ class CrawlConfig:
     wave_seconds: float = 60.0
     salt_buckets: int = 1
     discover_sitemaps: bool = False  # reference default is True; opt-in here
-    # seen-state bloom prune (probe, then exact verify of the positives)
-    # builds once the seen table reaches this many rows: it is a win only
-    # once the seen table dwarfs per-wave candidates, below that the
-    # exact anti-join is strictly faster. 0 → from the first wave;
-    # None → never (exact anti-join only).
-    bloom_min_seen: int | None = 2_000_000
     base_domain: str | None = None
     max_waves: int = 64
     # reference start_crawl: a seed URL carrying a path limits the crawl
@@ -309,9 +309,8 @@ class CrawlEngine:
 
         ``recrawl_before_wave=k`` turns the resume into a refresh crawl:
         URLs whose first crawl happened before wave k are EVICTED from
-        the exact seen table (tombstoned, not rewritten; the bloom
-        filter is never persisted, each run rebuilds it from the exact
-        table, so eviction needs no filter-level delete) and
+        the exact seen table (tombstoned, not rewritten; no filter state
+        sits beside that table, so eviction needs nothing else) and
         re-enqueued at depth 0 with fresh (wave, seq) numbers.
         Their re-fetched pages/links append as new wave rows; links they
         re-discover dedupe against the surviving seen set as usual.
@@ -428,7 +427,6 @@ class CrawlEngine:
         initial_seen_delta: DataFrame | None = None,
     ) -> CrawlResult:
         spark, cfg = self.spark, self.cfg
-        bloom = None
         wave = start_wave
         self._base_domain = base_domain
         # seen is a LIST of checkpointed delta parts — re-checkpointing
@@ -668,13 +666,9 @@ class CrawlEngine:
                 .drop("__rn")
             )
             cand = cand.withColumn("url_hash", U.url_hash(F.col("url")))
-            if (
-                bloom is None
-                and cfg.bloom_min_seen is not None
-                and next_seq >= cfg.bloom_min_seen
-            ):
-                bloom = bloom_build(seen_df).transform(local_ckpt)
-            fresh = dedupe_against_seen(cand, seen_df, bloom)
+            fresh = dedupe_against_seen(
+                cand, seen_df, prefilter=next_seq >= PREFILTER_MIN_SEEN
+            )
             # checkpointed + counted inside ordered_seq (no extra job)
             fresh, n_new = ordered_seq_counted(
                 fresh, ["src_seq", "anchor_pos"], seq_col="seq", start=next_seq
@@ -685,10 +679,6 @@ class CrawlEngine:
                 new_seen = fresh.select("url_hash", "url", "wave")
                 seen_parts.append(new_seen)
                 wave_deltas.append(new_seen)
-                if bloom is not None:
-                    bloom = bloom_merge(bloom, bloom_build(new_seen)).transform(
-                        local_ckpt
-                    )
                 if crawled_total < cfg.max_urls:
                     new_frontier = fresh.select(
                         "url", "url_hash", "host", "depth", "wave", "seq"

@@ -1,195 +1,48 @@
-"""Partitioned bloom-filter URL-seen state + exact verification.
+"""URL-seen dedupe: an exact anti-join against the seen table.
 
 Replaces the reference's in-memory Python sets
-(src/core/link_manager.py:12-14) with state that shards across
-executors and survives restarts:
+(src/core/link_manager.py:12-14) with the exact seen table
+``(url_hash, url, wave)``, which shards across executors and survives
+restarts through the wave snapshots.
 
-  * the exact seen table ``(url_hash, url, wave)`` — ground truth,
-    hash-bucketed by ``pmod(xxhash64(url), n_buckets)``;
-  * per-bucket bloom segments ``(bucket, bitmap)`` — a probabilistic
-    prune that lets a wave's candidate set skip the exact anti-join
-    for the (vast at 10^10) majority of never-seen URLs.
-
-Protocol per wave: candidates → bloom probe (cogrouped per bucket,
-vectorized numpy) → only *maybe-seen* rows do the exact left-anti join
-(kills false positives — bloom has zero false negatives, so
-bloom-negative rows are definitely new and bypass the join).
-
-At the 10^10 design point: 4096 buckets × 64 MiB bitmaps ≈ 256 GiB of
-filter state spread across the cluster; each wave shuffles only its
-candidates (bucketed on the same key as the state → co-located,
-no state shuffle).
+Two plans, one answer. The plain plan is a ``left_anti`` join on
+``url``: both sides shuffle, which is cheapest while the seen table is
+no larger than a few waves of candidates. Once the seen table dwarfs a
+wave's candidates, the prefilter plan broadcasts the candidates'
+``url_hash`` into a ``left_semi`` join on ``seen``. That scans all of
+``seen`` map-side and shuffles none of it; only the seen rows whose
+hash some candidate carries (the suspects) reach the exact
+``left_anti`` on ``(url_hash, url)``. The ``url`` leg of that key keeps
+the answer exact under ``xxhash64`` collisions.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-BLOOM_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("bitmap", T.BinaryType(), False),
-    ]
-)
-
-DEFAULT_BUCKETS = 64
-DEFAULT_BITS = 1 << 20  # 128 KiB per bucket locally; 2^29 at design scale
-DEFAULT_K = 5
-
-
-def _probe_positions(hashes: np.ndarray, bits: int, k: int) -> np.ndarray:
-    """k probe positions per hash via double hashing h1 + i*h2 (Kirsch-
-    Mitzenmacher); shape (n, k). Everything uint64 → mod bits."""
-    h = hashes.astype(np.uint64)
-    h1 = h
-    h2 = (h >> np.uint64(17)) | (h << np.uint64(47))  # rotate, odd-ified
-    h2 = h2 | np.uint64(1)
-    idx = np.empty((len(h), k), dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for i in range(k):
-            idx[:, i] = (h1 + np.uint64(i) * h2) % np.uint64(bits)
-    return idx
-
-
-def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    return df.withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int"))
-
-
-def bloom_build(
-    seen: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-    bits: int = DEFAULT_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Build per-bucket bitmaps from the exact seen table (url_hash col)."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["bucket"].iloc[0])
-        pos = _probe_positions(pdf["url_hash"].to_numpy(), bits, k).ravel()
-        # bool scatter + packbits instead of bitwise_or.at — the
-        # unbuffered scatter is ~10× slower than this at 1M+ positions;
-        # bitorder must stay 'little' to match the probe's (bm[p>>3] >>
-        # (p&7)) & 1 read
-        bm_bool = np.zeros(bits, dtype=bool)
-        bm_bool[pos.astype(np.int64)] = True
-        bm = np.packbits(bm_bool, bitorder="little")
-        return pd.DataFrame({"bucket": [bucket], "bitmap": [bm.tobytes()]})
-
-    return with_bucket(seen, n_buckets).groupBy("bucket").applyInPandas(build, BLOOM_SCHEMA)
-
-
-def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR together two bloom states (per-wave incremental union)."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["bucket"].iloc[0])
-        acc: np.ndarray | None = None
-        for buf in pdf["bitmap"]:
-            arr = np.frombuffer(buf, dtype=np.uint8)
-            acc = arr.copy() if acc is None else np.bitwise_or(acc, arr)
-        return pd.DataFrame({"bucket": [bucket], "bitmap": [acc.tobytes()]})
-
-    return a.unionByName(b).groupBy("bucket").applyInPandas(merge, BLOOM_SCHEMA)
-
-
-def bloom_prune(
-    candidates: DataFrame,
-    bloom_state: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-    bits: int = DEFAULT_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """url_hash → ``maybe_seen`` flags via cogrouped per-bucket probe.
-
-    Only the 8-byte hash column crosses the Python boundary (Arrow both
-    ways); candidate payloads never leave the JVM. Candidates and state
-    shuffle on the same bucket key → each task touches exactly one
-    bucket's bitmap, no per-row bitmap replication.
-
-    Returns a DataFrame (url_hash, maybe_seen) — join it back or feed it
-    to :func:`dedupe_against_seen`.
-    """
-    cand = with_bucket(candidates.select("url_hash"), n_buckets)
-    out_schema = T.StructType(
-        [
-            T.StructField("url_hash", T.LongType(), False),
-            T.StructField("maybe_seen", T.BooleanType(), False),
-        ]
-    )
-
-    def probe(cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty:
-            return pd.DataFrame({"url_hash": [], "maybe_seen": []}).astype(
-                {"url_hash": "int64", "maybe_seen": "bool"}
-            )
-        hashes = cand_pdf["url_hash"].to_numpy()
-        if state_pdf.empty:
-            return pd.DataFrame(
-                {"url_hash": hashes, "maybe_seen": np.zeros(len(hashes), dtype=bool)}
-            )
-        bm = np.frombuffer(state_pdf["bitmap"].iloc[0], dtype=np.uint8)
-        pos = _probe_positions(hashes, bits, k)
-        hit = np.ones(len(hashes), dtype=bool)
-        for i in range(k):
-            p = pos[:, i]
-            hit &= (
-                (bm[(p >> np.uint64(3)).astype(np.int64)] >> (p & np.uint64(7)).astype(np.uint8)) & 1
-            ).astype(bool)
-        return pd.DataFrame({"url_hash": hashes, "maybe_seen": hit})
-
-    return (
-        cand.groupBy("bucket")
-        .cogroup(bloom_state.groupBy("bucket"))
-        .applyInPandas(probe, out_schema)
-    )
 
 
 def dedupe_against_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    bloom_state: DataFrame | None = None,
-    n_buckets: int = DEFAULT_BUCKETS,
-    bits: int = DEFAULT_BITS,
-    k: int = DEFAULT_K,
+    candidates: DataFrame, seen: DataFrame, prefilter: bool = False
 ) -> DataFrame:
     """Return candidates ∉ seen (the reference's set-membership gate,
-    link_manager.py:48-55, as a state-backed anti-join).
-
-    With bloom state, the exact anti-join's probe side shrinks to the
-    bloom-positive sliver; correctness is unconditional (exact verify
-    kills false positives, bloom has no false negatives).
-    """
-    if bloom_state is None:
+    link_manager.py:48-55, as a state-backed anti-join). Candidate rows
+    keep their multiplicity; ``prefilter`` changes the plan, never the
+    rows."""
+    if not prefilter:
         return candidates.join(
             seen.select(F.col("url").alias("__seen_url")),
             candidates.url == F.col("__seen_url"),
             "left_anti",
         )
-    # hash-only probe: maybe-seen hashes form a (usually tiny) filter set;
-    # the exact verify join then only has to consider candidates whose
-    # hash is bloom-positive — at 10^10 scale that is what saves the
-    # all-candidates-vs-all-seen shuffle.
-    maybe = (
-        bloom_prune(candidates, bloom_state, n_buckets, bits, k)
-        .filter(F.col("maybe_seen"))
-        .select(F.col("url_hash").alias("__maybe_hash"))
-    )
-    suspect_seen = seen.join(
-        maybe, seen.url_hash == F.col("__maybe_hash"), "left_semi"
-    ).select(
-        F.col("url_hash").alias("__seen_hash"), F.col("url").alias("__seen_url")
-    )
-    # composite (hash, url) key: the sort-merge compares 8-byte longs
-    # first and touches the url string only on hash-equal rows; the url
-    # leg keeps exactness under xxhash64 collisions
+    hashes = F.broadcast(candidates.select(F.col("url_hash").alias("__cand_hash")))
+    suspects = seen.join(
+        hashes, seen.url_hash == F.col("__cand_hash"), "left_semi"
+    ).select(F.col("url_hash").alias("__seen_hash"), F.col("url").alias("__seen_url"))
+    # composite (hash, url) key: the join compares 8-byte longs first and
+    # touches the url string only on hash-equal rows
     return candidates.join(
-        suspect_seen,
+        suspects,
         (candidates.url_hash == F.col("__seen_hash"))
         & (candidates.url == F.col("__seen_url")),
         "left_anti",

@@ -790,12 +790,12 @@ FROM joined ORDER BY src_a, src_b
 
 
 # ---------------------------------------------------------------------------
-# Bloom-filter FPR audit — measure the seen-filter guarantee
+# Bloom-filter FPR audit — measure a probabilistic seen-filter's guarantee
 # ---------------------------------------------------------------------------
 BF_M = 1024   # bits — deliberately small vs the shipped key counts so
               # the false-positive branch is exercised by the test data
-              # (production sizes m = -n·lnp/ln²2; the ENGINE's filter in
-              # operators/seen.py does — this audit measures the math)
+              # (production sizes m = -n·lnp/ln²2 — this audit measures
+              # the math)
 BF_K = 4      # hash functions
 
 
@@ -803,8 +803,8 @@ def bloom_fpr_audit(
     spark: SparkSession, sf_dir: str, m: int = BF_M, k: int = BF_K
 ) -> DataFrame:
     """(m, k, n_inserted, n_probes, false_pos, fpr_pm): MEASURED
-    false-positive rate of the bloom scheme the frontier's seen filter
-    uses — insert even-doc_id keys, probe the disjoint odd-doc_id set,
+    false-positive rate of a k-hash bloom scheme over URL-seen keys —
+    insert even-doc_id keys, probe the disjoint odd-doc_id set,
     count full k-position hits. The audit exists because the filter's
     guarantee is probabilistic: a deploy sizing (m, k) for 10^10 seen
     URLs should measure the realized FPR against (1−e^{−kn/m})^k on
@@ -816,8 +816,10 @@ def bloom_fpr_audit(
     count-of-matched-positions == k test. No bitmap bytes cross
     engines, so the DuckDB twin replays the identical set logic —
     bit-for-bit the same verdicts as a packed-bitmap probe, stated in
-    joins (the engine's packed path lives in operators/seen.py and is
-    pinned equivalent to the exact anti-join by test_properties)."""
+    joins. The crawl engine itself keeps no bloom filter: its seen
+    dedupe (operators/seen.py) is exact, and its hash prefilter
+    matches on the full 64-bit url_hash, with no false positives to
+    measure."""
     docs = load(spark, "documents", sf_dir).select("doc_id")
     ins = docs.filter(F.pmod("doc_id", F.lit(2)) == 0)
     probes = docs.filter(F.pmod("doc_id", F.lit(2)) == 1)

@@ -7,7 +7,7 @@ filtering, issue rules, word counting) is exercised here over URLs
 synthesized *deterministically inside the query* from the `documents`
 table. The same synthesis expression exists in the oracle SQL, so both
 engines see byte-identical inputs. The real frontier engine (waves,
-bloom state, resume) lives in operators/ and is tested by pytest golden
+seen state, resume) lives in operators/ and is tested by pytest golden
 fixtures.
 """
 
@@ -83,8 +83,9 @@ FROM synth ORDER BY doc_id
 def seen_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The core frontier dedup operator: admit candidate URLs not in the
     seen set (reference: src/core/link_manager.py:48-55 set membership →
-    left-anti join here; the bloom-filter state table version lives in
-    operators/seen.py and is a prune in front of this exact join)."""
+    left-anti join here; the engine's version in operators/seen.py adds
+    a broadcast candidate-hash prefilter in front of this exact join
+    once the seen table is large)."""
     docs = _synth_url(load(spark, "documents", sf_dir))
     cand = docs.select(
         "doc_id", U.canonicalize_url(F.col("raw_url")).alias("url")

@@ -42,7 +42,7 @@ _SHARD_COST: dict[str, float] = {
     "test_dedup_cap.py": 15.7,
     "test_canonicalize_native.py": 14.7,
     "test_driver_sim_smoke.py": 13.2,
-    "test_sweep_smoke.py": 53.4,
+    "test_sweep_smoke.py": 76.2,
     "test_filesize_gate.py": 13.0,
     "test_sitemap.py": 11.7,
     "test_kmeans.py": 30.0,
@@ -54,7 +54,7 @@ _SHARD_COST: dict[str, float] = {
     "test_single_page_mode.py": 3.0,
     "test_temporal.py": 2.3,
     "test_multimodal.py": 2.0,
-    "test_properties.py": 1.9,
+    "test_properties.py": 12.0,
     "test_substring_trim.py": 1.8,
     "test_span_sequences.py": 0.3,
 }

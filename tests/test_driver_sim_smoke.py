@@ -10,13 +10,16 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def test_driver_sim_subprocess_smoke():
     proc = subprocess.run(
         [
             sys.executable,
-            "/root/repo/scripts/driver_sim.py",
+            str(REPO / "scripts" / "driver_sim.py"),
             "--no-entry",
             "--only",
             "multi_filter_counts,status_histogram",
@@ -40,7 +43,7 @@ def test_entry_preserves_caller_state_and_conf(spark):
     from pyspark.sql import functions as F
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", REPO / "__spark_entry__.py"
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from seo_crawler_spark.operators import frontier
 from seo_crawler_spark.operators.frontier import CrawlConfig, CrawlEngine
 from seo_crawler_spark.reference_model import ReferenceModel
 from seo_crawler_spark.sources.corpus import (
@@ -100,17 +101,28 @@ def test_budget_cap_seen_matches_model(
     assert len(expected["seen"]) > 15
 
 
-def test_no_bloom_same_result(spark, corpus_df, corpus_dict, robots_df, robots_dict):
-    """Bloom filter is a prune, never a semantics change."""
+def test_prefilter_same_result(
+    spark, corpus_df, corpus_dict, robots_df, robots_dict, monkeypatch
+):
+    """The candidate-hash prefilter changes the dedupe plan, never the
+    crawl: with it on from the first wave, order and seen set equal the
+    default (plain anti-join) run's."""
     seeds = seed_urls(N_HOSTS)
-    cfg_b = CrawlConfig(max_depth=2, max_urls=150, bloom_min_seen=0)
-    cfg_n = CrawlConfig(max_depth=2, max_urls=150, bloom_min_seen=None)
-    r_b = CrawlEngine(spark, corpus_df, robots_df, cfg_b).run(seeds)
-    r_n = CrawlEngine(spark, corpus_df, robots_df, cfg_n).run(seeds)
-    ob = [r["url"] for r in r_b.order.collect()]
+    cfg = CrawlConfig(max_depth=2, max_urls=150)
+    r_n = CrawlEngine(spark, corpus_df, robots_df, cfg).run(seeds)
+    monkeypatch.setattr(frontier, "PREFILTER_MIN_SEEN", 0)
+    plans = []  # the prefilter flag of every dedupe call
+    dedupe = frontier.dedupe_against_seen
+    monkeypatch.setattr(
+        frontier, "dedupe_against_seen",
+        lambda c, s, prefilter: plans.append(prefilter) or dedupe(c, s, prefilter),
+    )
+    r_p = CrawlEngine(spark, corpus_df, robots_df, cfg).run(seeds)
+    assert plans and all(plans)
+    op = [r["url"] for r in r_p.order.collect()]
     on = [r["url"] for r in r_n.order.collect()]
-    assert ob == on
-    assert {r["url"] for r in r_b.seen.collect()} == {
+    assert op == on
+    assert {r["url"] for r in r_p.seen.collect()} == {
         r["url"] for r in r_n.seen.collect()
     }
 
@@ -122,7 +134,7 @@ def test_politeness_budget_respected(spark, corpus_df, robots_df):
     seeds = seed_urls(N_HOSTS)
     cfg = CrawlConfig(
         max_depth=2, max_urls=10_000, politeness_budget=10,
-        salt_buckets=2, max_waves=40, bloom_min_seen=None,
+        salt_buckets=2, max_waves=40,
     )
     got = CrawlEngine(spark, corpus_df, robots_df, cfg).run(seeds)
     per_wave_host = (
@@ -142,7 +154,7 @@ def test_politeness_budget_respected(spark, corpus_df, robots_df):
         assert row["count"] <= cap, (row, b, cap)
 
     # same final seen set as un-throttled run
-    cfg2 = CrawlConfig(max_depth=2, max_urls=10_000, bloom_min_seen=None)
+    cfg2 = CrawlConfig(max_depth=2, max_urls=10_000)
     ref = CrawlEngine(spark, corpus_df, robots_df, cfg2).run(seeds)
     assert {r["url"] for r in got.seen.collect()} == {
         r["url"] for r in ref.seen.collect()

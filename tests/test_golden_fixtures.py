@@ -6,6 +6,7 @@ regex include/exclude pattern gates against the model."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 from seo_crawler_spark.operators.frontier import CrawlConfig, CrawlEngine
 from seo_crawler_spark.reference_model import ReferenceModel
@@ -15,14 +16,16 @@ from seo_crawler_spark.sources.corpus import (
     seed_urls,
 )
 
+FIXTURES = Path(__file__).resolve().parents[1] / "fixtures"
+
 
 def test_model_matches_frozen_fixture():
     import scripts.freeze_fixtures as FF
 
     r = FF.build()
-    with open("/root/repo/fixtures/crawl_order.json") as f:
+    with open(FIXTURES / "crawl_order.json") as f:
         frozen_order = json.load(f)
-    with open("/root/repo/fixtures/seen_set.json") as f:
+    with open(FIXTURES / "seen_set.json") as f:
         frozen_seen = json.load(f)
     assert [(e["url"], e["depth"]) for e in frozen_order] == r["order"]
     assert sorted(r["seen"]) == frozen_seen

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from seo_crawler_spark.operators import frontier
 from seo_crawler_spark.operators.frontier import CrawlConfig, CrawlEngine
 from seo_crawler_spark.sources.corpus import (
     generate_corpus,
@@ -29,38 +30,35 @@ def robots_df(spark):
 
 
 def test_resume_equals_uninterrupted(spark, corpus_df, robots_df, tmp_path):
-    _check_resume_equals_uninterrupted(
-        spark, corpus_df, robots_df, tmp_path, bloom_min_seen=None
-    )
+    _check_resume_equals_uninterrupted(spark, corpus_df, robots_df, tmp_path)
 
 
-def test_resume_equals_uninterrupted_bloom(spark, corpus_df, robots_df, tmp_path):
-    """The bloom prune built from the restored seen table on resume
-    (bloom_min_seen=0: from the first wave of every run) must give the
-    crawl order of the uninterrupted exact run."""
+def test_resume_equals_uninterrupted_prefilter(
+    spark, corpus_df, robots_df, tmp_path, monkeypatch
+):
+    """With the candidate-hash prefilter on from the first wave of every
+    run (``PREFILTER_MIN_SEEN`` = 0), the interrupted and resumed crawl
+    must give the crawl order and seen set of the uninterrupted one."""
     _check_resume_equals_uninterrupted(
-        spark, corpus_df, robots_df, tmp_path, bloom_min_seen=0
+        spark, corpus_df, robots_df, tmp_path, monkeypatch=monkeypatch
     )
 
 
 def _check_resume_equals_uninterrupted(
-    spark, corpus_df, robots_df, tmp_path, bloom_min_seen
+    spark, corpus_df, robots_df, tmp_path, monkeypatch=None
 ):
     seeds = seed_urls(N_HOSTS)
     state = str(tmp_path / "crawlstate")
 
     def cfg(**kw):
-        return CrawlConfig(
-            max_depth=3, max_urls=10_000, bloom_min_seen=bloom_min_seen, **kw
-        )
+        return CrawlConfig(max_depth=3, max_urls=10_000, **kw)
 
-    # uninterrupted reference run (exact anti-join only)
-    full = CrawlEngine(
-        spark, corpus_df, robots_df,
-        CrawlConfig(max_depth=3, max_urls=10_000, bloom_min_seen=None),
-    ).run(seeds)
+    # uninterrupted reference run (default dedupe plan)
+    full = CrawlEngine(spark, corpus_df, robots_df, cfg()).run(seeds)
     full_order = [(r["url"], r["wave"]) for r in full.order.collect()]
     assert len(full_order) > 20
+    if monkeypatch is not None:
+        monkeypatch.setattr(frontier, "PREFILTER_MIN_SEEN", 0)
 
     # interrupted: stop after 2 waves (simulated crash — wave snapshots
     # are the only surviving state)

@@ -15,8 +15,11 @@ from __future__ import annotations
 import json
 import shutil
 import subprocess
+from pathlib import Path
 
 import pytest
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None, reason="no spark-submit on PATH")
@@ -29,7 +32,7 @@ def test_spark_submit_pyfiles_crawl(tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=120,
     )
     assert zip_out.returncode == 0, zip_out.stderr
@@ -44,7 +47,7 @@ def test_spark_submit_pyfiles_crawl(tmp_path):
             "spark.sql.shuffle.partitions=8",
             "--py-files",
             pyfiles,
-            "/root/repo/scripts/submit_crawl.py",
+            str(REPO / "scripts" / "submit_crawl.py"),
             "200",
             "120",
         ],

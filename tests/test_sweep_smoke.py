@@ -1,8 +1,8 @@
-"""Smoke run of scripts/sweep.py, both modes at the smallest scale, each
-in a fresh subprocess, so the one remaining measurement harness cannot
-rot unnoticed. The two modes run concurrently to keep the suite's wall
-time down; the numbers they print are not checked, only their shape and
-the scaling mode's equal-aggregates verdict."""
+"""Smoke run of scripts/sweep.py, every mode at the smallest scale, each
+in a fresh subprocess, so the one measurement harness cannot rot
+unnoticed. The modes run concurrently to keep the suite's wall time
+down; the numbers they print are not checked, only their shape and the
+scaling and seen modes' equal-result verdicts."""
 
 from __future__ import annotations
 
@@ -22,7 +22,7 @@ def test_sweep_both_modes_smoke():
             stderr=subprocess.PIPE,
             text=True,
         )
-        for mode in ("scaling", "long_run")
+        for mode in ("scaling", "long_run", "seen")
     }
     lines = {}
     for mode, proc in procs.items():
@@ -43,3 +43,10 @@ def test_sweep_both_modes_smoke():
     summary = lines["long_run"][-1]
     assert deciles and summary["waves"] > 1 and summary["crawled"] > 0
     assert all(r["sec"] > 0 and "expand" in r for r in deciles)
+
+    sizes = [r for r in lines["seen"] if "seen" in r]
+    assert [r["seen"] for r in sizes] == [2_000, 20_000, 100_000]
+    for r in sizes:
+        assert r["fresh_plain"] == r["fresh_prefilter"] == r["candidates"] // 2
+        assert len(r["plain_runs"]) == len(r["prefilter_runs"]) == 4
+    assert lines["seen"][-1]["counts_equal"] is True
