@@ -347,9 +347,10 @@ def seen(scale: float) -> int:
                 ).count()
                 return time.monotonic() - t
 
-            once("plain"), once("prefilter")  # codegen, page cache
+            for plan in secs:  # warm-up: codegen, page cache
+                once(plan)
             for rep in range(SEEN_REPS):
-                order = ("plain", "prefilter")[::1 if rep % 2 == 0 else -1]
+                order = list(secs) if rep % 2 == 0 else list(secs)[::-1]
                 for plan in order:
                     secs[plan].append(once(plan))
         equal = fresh["plain"] == fresh["prefilter"] == n_cand // 2
