@@ -11,13 +11,13 @@ canonicalization is a superset:
   * sort query parameters (lexicographic over 'k=v' atoms)
 
 Everything here is a pure column expression (whole-stage-codegen'd,
-JVM-side) — the hot frontier path never leaves the JVM. A pandas-UDF
-variant backed by urllib.parse exists for parity testing only.
+JVM-side) — the hot frontier path never leaves the JVM. A driver-side
+urllib.parse twin (``_canonicalize_py``) serves the reference model,
+the seed's base domain and the parity tests.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -119,23 +119,6 @@ def canonicalize_url_sql(col: str) -> str:
     )
 
 
-def clean_url_reference(url: Column) -> Column:
-    """The reference's *exact* cleaning: fragment strip + rebuild
-    scheme://netloc/path[?query] (src/core/link_manager.py:34-38) —
-    no lowercasing, no port stripping, no param sort."""
-    scheme = F.regexp_extract(url, _SCHEME_RE, 1)
-    netloc = F.regexp_extract(url, _AUTHORITY_RE, 1)
-    path = url_path(url)
-    q = url_query(url)
-    return F.concat(
-        scheme,
-        F.lit("://"),
-        netloc,
-        path,
-        F.when(q == "", F.lit("")).otherwise(F.concat(F.lit("?"), q)),
-    )
-
-
 def is_internal(url: Column, base_domain: Column | str) -> Column:
     """www-stripped netloc equality vs base domain (reference:
     src/core/link_manager.py:158-163 compares urlparse().netloc, which
@@ -161,7 +144,7 @@ def url_hash(url: Column) -> Column:
     return F.xxhash64(url)
 
 
-# --- parity UDF (tests only; not used in any hot path) ---------------------
+# --- driver-side twin (reference model, seeds, tests; no hot path) ---------
 
 def _canonicalize_py(u: str) -> str:
     from urllib.parse import urlsplit
@@ -182,8 +165,3 @@ def _canonicalize_py(u: str) -> str:
     query = "&".join(sorted(p.query.split("&"))) if p.query else ""
     return f"{scheme}://{netloc}{path}" + (f"?{query}" if query else "")
 
-
-def canonicalize_url_pandas(s: pd.Series) -> pd.Series:
-    """Vectorized urllib-backed canonicalizer (Series→Series); registered as
-    a pandas UDF in tests to cross-check the native expression."""
-    return s.map(_canonicalize_py)

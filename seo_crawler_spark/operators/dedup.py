@@ -45,6 +45,9 @@ from ..functions.text import (
 from ..parallel import run_parallel
 from ..sources.tables import load
 from ..session import SCAN_FANOUT
+# the one cosine definition: a drifted copy here would silently desync
+# dedup scoring from ANN scoring
+from .simsearch import _cosine
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -757,14 +760,6 @@ ORDER BY a, b
 # ---------------------------------------------------------------------------
 
 
-def _cosine(a, b):
-    # single definition lives in simsearch — a drifted copy here would
-    # silently desync dedup scoring from ANN scoring
-    from .simsearch import _cosine as _c
-
-    return _c(a, b)
-
-
 def dedup_embedding_cosine_brute(
     spark: SparkSession, sf_dir: str, threshold: float = 0.45
 ) -> DataFrame:
@@ -783,16 +778,6 @@ def dedup_embedding_cosine_brute(
         .select("a", "b", "cos")
         .orderBy("a", "b")
     )
-
-
-def dedup_embedding_cosine_brute_sql(threshold: float = 0.45) -> str:
-    return f"""
-SELECT x.vec_id AS a, y.vec_id AS b,
-       round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) AS cos
-FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
-WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 4) >= {threshold}
-ORDER BY a, b
-"""
 
 
 # 16-bit hyperplane signature banded 4×4: candidates share at least one

@@ -2,20 +2,24 @@
 
 The reference crawls with a FIFO deque + worker threads
 (src/crawler.py:669-744, src/core/link_manager.py:177-182). Here one
-Spark job per BFS wave replaces the loop; the crawl-order contract is
+round of Spark jobs per BFS wave replaces the loop; the crawl-order contract is
 ``(wave, seq)`` where ``seq`` is the global discovery index:
 depth-major BFS, within a page = anchor document order — exactly the
 order the reference's single-threaded scheduler would pop.
 
 Per wave (all DataFrame ops; the driver only sequences waves):
 
-  frontier ──politeness rank-gate──▶ scheduled ──join corpus──▶ fetched
-     │                                                              │
-     └─ deferred (re-queued)               mapInPandas extraction ──┤
-                                                                    ▼
-  seen ◀─ exact anti-join      ◀─ admission predicate ◀─ exploded links
-    │                                                               │
-    └──────────▶ next frontier (ordered_seq over src_seq,anchor_pos)┘
+  frontier ──politeness rank-gate──▶ scheduled ──join fetcher rows──▶ fetched
+     │                                                                  │
+     └─ deferred (re-queued)                   mapInPandas extraction ──┤
+                                                                        ▼
+  seen ◀─ exact anti-join ◀─ first discovery ◀─ admission ◀─ exploded links
+    │                                                                   │
+    └──────▶ next frontier (ordered_seq_counted over src_seq,anchor_pos)┘
+
+The fetcher (sources/fetcher.py) is the one fetch path; without one the
+engine wraps its corpus in ``StaticCorpusFetcher``, whose rows are the
+whole corpus table.
 
 Reference parity notes:
   * admission predicate = crawler.py:1139-1179 (external-domain policy,
@@ -29,10 +33,12 @@ Reference parity notes:
 
 from __future__ import annotations
 
+import dataclasses
 import fnmatch
 import time
-from collections.abc import Iterator
 from dataclasses import dataclass, field
+from functools import reduce
+from urllib.parse import urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -41,8 +47,11 @@ from pyspark.sql import types as T
 
 from ..ckpt import local_ckpt
 from ..functions import urls as U
+from ..metrics import codegen_compiles, observe_fetch, partition_lineage
+from ..sources.fetcher import StaticCorpusFetcher
+from ..state.snapshots import SnapshotStore
 from .extract import extract_pages, explode_links
-from .ordering import ordered_seq, ordered_seq_counted
+from .ordering import ordered_seq_counted
 from .politeness import politeness_tag, template_cap_tag
 from .seen import dedupe_against_seen
 
@@ -121,6 +130,17 @@ def _glob_to_regex_col(globs_col):
     return translate(globs_col)
 
 
+def _first_discovery(cand: DataFrame, *order_cols: str) -> DataFrame:
+    """First-discovery-wins dedupe (link_manager.py:48-55): per url, keep
+    the row that comes first by ``order_cols``."""
+    w = Window.partitionBy("url").orderBy(*order_cols)
+    return (
+        cand.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -145,17 +165,14 @@ class CrawlEngine:
             raise ValueError(
                 "politeness_budget must be >= 1 (or None to disable)"
             )
-        self.corpus = corpus.select(
-            "doc_id", "host", "status_code", "content_type", "size",
-            "response_time_ms", "raw_html",
-        )
-        # production-fetch connector (sources/fetcher.py contract): when
-        # set, each wave's corpus rows come from fetcher.fetch(spark,
-        # scheduled, wave) instead of the static corpus table
-        self.fetcher = fetcher
+        # fetch connector (sources/fetcher.py contract): each wave's
+        # corpus rows come from fetcher.fetch(spark, scheduled, wave);
+        # the default serves the static corpus table
+        self.fetcher = fetcher or StaticCorpusFetcher(corpus)
         self.robots = robots
         self.sitemaps = sitemaps
         self.state_dir = state_dir
+        self.store = SnapshotStore(state_dir) if state_dir else None
         # pause/stop control (crawler.py:344-372 is_paused/stop flags):
         # a callable polled between waves returning None|'pause'|'stop' —
         # waves are the atomic unit, so pausing commits the finished wave
@@ -213,29 +230,14 @@ class CrawlEngine:
     # -- wave loop --------------------------------------------------------
     def run(self, seeds: list[str]) -> CrawlResult:
         spark, cfg = self.spark, self.cfg
-        if cfg.base_domain:
-            base_domain = cfg.base_domain
-        else:
-            # base domain comes from the CANONICAL first seed (north-star
-            # canonicalization strips :443 etc.) — raw netloc would keep
-            # the port and misclassify every link as external
-            from urllib.parse import urlparse
-
-            from ..functions.urls import _canonicalize_py
-
-            first = seeds[0] if "://" in seeds[0] else f"https://{seeds[0]}"
-            base_domain = urlparse(_canonicalize_py(first)).netloc
-
-        if cfg.single_page_if_path:
-            from urllib.parse import urlparse as _up
-
-            f0_url = seeds[0] if "://" in seeds[0] else f"https://{seeds[0]}"
-            if _up(f0_url).path not in ("", "/"):
-                # single-page mode (crawler.py:218-222)
-                import dataclasses
-
-                cfg = dataclasses.replace(cfg, max_depth=0)
-                self.cfg = cfg
+        first = seeds[0] if "://" in seeds[0] else f"https://{seeds[0]}"
+        # base domain comes from the CANONICAL first seed (north-star
+        # canonicalization strips :443 etc.) — raw netloc would keep the
+        # port and misclassify every link as external
+        base_domain = cfg.base_domain or urlparse(U._canonicalize_py(first)).netloc
+        if cfg.single_page_if_path and urlparse(first).path not in ("", "/"):
+            # single-page mode (crawler.py:218-222)
+            cfg = self.cfg = dataclasses.replace(cfg, max_depth=0)
 
         # wave 0: seeds first (bypass admission — crawler.py:245 add_url
         # has no should_crawl callback), then sitemap-discovered URLs in
@@ -264,42 +266,31 @@ class CrawlEngine:
         admitted0 = cand0.filter(F.col("is_seed")).unionByName(
             self._admit(cand0.filter(~F.col("is_seed")), base_domain)
         )
-        w = Window.partitionBy("url").orderBy("list_pos")
-        f0 = (
-            admitted0.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "is_seed", "host")
-        )
-        frontier = (
-            ordered_seq(f0, ["list_pos"], seq_col="seq", start=0)
-            .select(
-                "url",
-                U.url_hash(F.col("url")).alias("url_hash"),
-                U.url_host(F.col("url")).alias("host"),
-                F.lit(0).alias("depth"),
-                F.lit(0).alias("wave"),
-                "seq",
-            )
-            .transform(local_ckpt)
-        )
+        f0 = _first_discovery(admitted0, "list_pos").drop("is_seed", "host")
+        frontier, n_seeds = ordered_seq_counted(f0, ["list_pos"], seq_col="seq")
+        frontier = frontier.select(
+            "url",
+            U.url_hash(F.col("url")).alias("url_hash"),
+            U.url_host(F.col("url")).alias("host"),
+            F.lit(0).alias("depth"),
+            F.lit(0).alias("wave"),
+            "seq",
+        ).transform(local_ckpt)
 
         seen = frontier.select("url_hash", "url", "wave").transform(local_ckpt)
-        if self.state_dir:
-            from ..state.snapshots import SnapshotStore
-
-            SnapshotStore(self.state_dir).set_crawl_status(
-                "running", cfg.started_at
-            )
+        if self.store:
+            self.store.set_crawl_status("running", cfg.started_at)
         return self._execute(
             base_domain=base_domain,
             frontier=frontier,
             seen=seen,
-            next_seq=frontier.count(),
+            next_seq=n_seeds,
             crawled_total=0,
             start_wave=0,
             pages_parts=[],
             links_parts=[],
             metrics=[],
+            pending_seen=seen,  # the seeds persist with the first wave
         )
 
     def resume(self, recrawl_before_wave: int | None = None) -> CrawlResult:
@@ -314,12 +305,13 @@ class CrawlEngine:
         re-enqueued at depth 0 with fresh (wave, seq) numbers.
         Their re-fetched pages/links append as new wave rows; links they
         re-discover dedupe against the surviving seen set as usual.
-        Re-fetches count against max_urls like any other fetch."""
-        if not self.state_dir:
-            raise ValueError("resume requires a state_dir")
-        from ..state.snapshots import SnapshotStore
+        Re-fetches count against max_urls like any other fetch.
 
-        store = SnapshotStore(self.state_dir)
+        The restored seen set is already persisted; only the refreshed
+        URLs' new seen rows are pending for the first wave's delta."""
+        store = self.store
+        if store is None:
+            raise ValueError("resume requires a state_dir")
         # crash recovery first (main.py:1507-1524): a manifest still
         # 'running' means the prior process died mid-crawl → mark failed,
         # then this resume flips it back to running
@@ -339,20 +331,16 @@ class CrawlEngine:
         links = store.read_links(self.spark, latest).transform(local_ckpt)
         metrics = store.metrics()  # committed waves only, sorted by wave
         crawled_total = sum(m["scheduled"] for m in metrics)
-        cfg = self.cfg
-        if cfg.base_domain:
-            base_domain = cfg.base_domain
-        else:
-            base_domain = manifest["base_domain"]
+        base_domain = self.cfg.base_domain or manifest["base_domain"]
         # gap-free (wave,seq) contract: the next seq is max(assigned)+1
         # over everything that ever got one (crawled pages ∪ pending
         # frontier) — robust even if the seen table were ever inflated,
         # unlike seen.count()
-        max_seq = -1
-        for df in (pages, frontier):
-            row = df.agg(F.max("seq").alias("m")).collect()[0]
-            if row["m"] is not None:
-                max_seq = max(max_seq, row["m"])
+        max_seq = (
+            pages.select("seq").unionByName(frontier.select("seq"))
+            .agg(F.max("seq")).first()[0]
+        )
+        max_seq = -1 if max_seq is None else max_seq
         refreshed_seen = None
         if recrawl_before_wave is not None:
             # a URL can be seen (discovered) but still pending in the
@@ -410,7 +398,7 @@ class CrawlEngine:
             pages_parts=[pages],
             links_parts=[links],
             metrics=list(metrics),
-            initial_seen_delta=refreshed_seen,
+            pending_seen=refreshed_seen,
         )
 
     def _execute(
@@ -424,23 +412,24 @@ class CrawlEngine:
         pages_parts: list,
         links_parts: list,
         metrics: list,
-        initial_seen_delta: DataFrame | None = None,
+        pending_seen: DataFrame | None,
     ) -> CrawlResult:
+        """The wave loop: every wave schedules, fetches, extracts,
+        expands and (with a state_dir) commits its snapshot through the
+        same path. ``pending_seen`` holds seen rows not yet persisted
+        (the seeds on run(), the refreshed URLs on a refresh resume);
+        the first wave of the call appends them to its seen delta."""
         spark, cfg = self.spark, self.cfg
         wave = start_wave
-        self._base_domain = base_domain
         # seen is a LIST of checkpointed delta parts — re-checkpointing
         # the full seen table every wave would copy O(|seen|) per wave
         # (quadratic total; at 10^10 fatal). The anti-join scans the
         # lazy union of parts instead.
         seen_parts: list[DataFrame] = [seen]
-        seen = None
         n_frontier = frontier.count()  # only upfront count; tracked after
 
-        from ..metrics import codegen_compiles, observe_fetch, partition_lineage
-
         final_status = "completed"
-        while wave < cfg.max_waves and crawled_total < cfg.max_urls:
+        while n_frontier and wave < cfg.max_waves and crawled_total < cfg.max_urls:
             t0 = time.monotonic()
             phases: dict[str, float] = {}
             _pt = [t0]
@@ -449,8 +438,7 @@ class CrawlEngine:
                 now = time.monotonic()
                 phases[name] = round(now - _pt[0], 3)
                 _pt[0] = now
-            if n_frontier == 0:
-                break
+
             # pause/stop poll (crawler.py:344-372) — between waves, so the
             # previous wave's snapshot is already committed atomically
             req = self.control() if self.control is not None else None
@@ -469,21 +457,12 @@ class CrawlEngine:
                 )
 
             n_front_wave = n_frontier
-            seen_df = seen_parts[0]
-            for p in seen_parts[1:]:
-                seen_df = seen_df.unionByName(p)
-            # seed-seen rows belong to wave 0's delta ONLY on a fresh run;
-            # on resume seen_parts[0] is the whole restored seen set and is
-            # already persisted in earlier wave dirs — re-emitting it would
-            # duplicate every prior row in the append-only snapshot store
-            # (and inflate seen.count() on the next resume)
-            wave_deltas: list[DataFrame] = [seen_parts[0]] if wave == 0 else []
-            if initial_seen_delta is not None and wave == start_wave:
-                # refresh-crawl resume: the re-enqueued URLs' new seen
-                # rows persist with this run's first committed wave
-                # (their old rows are tombstoned at the same wave, so
-                # the pair is atomic under the manifest rule)
-                wave_deltas.append(initial_seen_delta)
+            seen_df = reduce(DataFrame.unionByName, seen_parts)
+            # the call's first wave persists the pending seen rows; a
+            # refresh resume's replacement rows thereby commit with the
+            # tombstones of their old rows (atomic under the manifest rule)
+            wave_deltas = [pending_seen] if pending_seen is not None else []
+            pending_seen = None
 
             # crawl-trap template cap (per-(host, template) budget,
             # over-cap tail defers like politeness — geometric throttling
@@ -549,19 +528,15 @@ class CrawlEngine:
                 )
                 n_sched = remaining
 
-            # "fetch" = join against the corpus (no live network; a miss is
-            # the moral equivalent of a dead link → empty error result,
-            # reference seo_extractor.create_empty_result)
+            # "fetch" = join against the fetcher's rows (no live network; a
+            # miss is the moral equivalent of a dead link → empty error
+            # result, reference seo_extractor.create_empty_result)
             # file-size gate (crawler.py:789-803): content-length beyond
             # max_file_size ⇒ empty error row — status 0, body dropped
             # before parse, so its links never expand
-            wave_corpus = (
-                self.fetcher.fetch(spark, scheduled, wave).select(
-                    "doc_id", "host", "status_code", "content_type",
-                    "size", "response_time_ms", "raw_html",
-                )
-                if self.fetcher is not None
-                else self.corpus
+            wave_corpus = self.fetcher.fetch(spark, scheduled, wave).select(
+                "doc_id", "host", "status_code", "content_type",
+                "size", "response_time_ms", "raw_html",
             )
             too_big = (
                 (wave_corpus["size"] > cfg.max_file_size)
@@ -659,17 +634,12 @@ class CrawlEngine:
             cand = cand.withColumn("host", U.url_host(F.col("url")))
             cand = self._admit(cand, base_domain)
             # first-discovery-wins within the wave
-            wdisc = Window.partitionBy("url").orderBy("src_seq", "anchor_pos")
-            cand = (
-                cand.withColumn("__rn", F.row_number().over(wdisc))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            cand = _first_discovery(cand, "src_seq", "anchor_pos")
             cand = cand.withColumn("url_hash", U.url_hash(F.col("url")))
             fresh = dedupe_against_seen(
                 cand, seen_df, prefilter=next_seq >= PREFILTER_MIN_SEEN
             )
-            # checkpointed + counted inside ordered_seq (no extra job)
+            # checkpointed + counted inside ordered_seq_counted (no extra job)
             fresh, n_new = ordered_seq_counted(
                 fresh, ["src_seq", "anchor_pos"], seq_col="seq", start=next_seq
             )
@@ -689,12 +659,11 @@ class CrawlEngine:
             # next frontier: lazy union over this wave's checkpoints —
             # one lineage level deep, nothing recomputes across waves
             parts = [p for p in (deferred, new_frontier) if p is not None]
-            if parts:
-                frontier = parts[0]
-                for p in parts[1:]:
-                    frontier = frontier.unionByName(p)
-            else:
-                frontier = spark.createDataFrame([], frontier.schema)
+            frontier = (
+                reduce(DataFrame.unionByName, parts)
+                if parts
+                else spark.createDataFrame([], frontier.schema)
+            )
             n_frontier = n_def + n_new
             _mark("expand")
 
@@ -732,39 +701,34 @@ class CrawlEngine:
             # carries ALL five phase timings — only the manifest write
             # itself (ms) is unattributed.
             if len(seen_parts) >= SEEN_FOLD_EVERY:
-                folded = seen_parts[0]
-                for p in seen_parts[1:]:
-                    folded = folded.unionByName(p)
-                seen_parts = [folded.transform(local_ckpt)]
+                seen_parts = [
+                    reduce(DataFrame.unionByName, seen_parts).transform(local_ckpt)
+                ]
             _mark("fold")
-            if self.state_dir:
-                if wave_deltas:
-                    delta = wave_deltas[0]
-                    for p in wave_deltas[1:]:
-                        delta = delta.unionByName(p)
-                else:
-                    delta = spark.createDataFrame([], seen_parts[0].schema)
-                self._snapshot(
-                    wave, frontier, delta, extracted, wave_links, metrics[-1],
+            if self.store:
+                self.store.commit_wave(
+                    wave,
+                    frontier=frontier,
+                    seen=(
+                        reduce(DataFrame.unionByName, wave_deltas)
+                        if wave_deltas
+                        else spark.createDataFrame([], seen_parts[0].schema)
+                    ),
+                    pages=extracted,
+                    links=wave_links,
+                    metric=metrics[-1],
+                    base_domain=base_domain,
                     on_data_written=_close_wave,
                 )
             else:
                 _close_wave()
             wave += 1
 
-        if self.state_dir:
-            from ..state.snapshots import SnapshotStore
+        if self.store:
+            self.store.set_crawl_status(final_status, cfg.started_at)
 
-            SnapshotStore(self.state_dir).set_crawl_status(
-                final_status, cfg.started_at
-            )
-
-        pages = pages_parts[0]
-        for p in pages_parts[1:]:
-            pages = pages.unionByName(p)
-        links = links_parts[0]
-        for l in links_parts[1:]:
-            links = links.unionByName(l)
+        pages = reduce(DataFrame.unionByName, pages_parts)
+        links = reduce(DataFrame.unionByName, links_parts)
 
         # linked_from backfill (crawler.py:1125-1137): all sources that link
         # to each crawled URL, first-seen order
@@ -797,11 +761,12 @@ class CrawlEngine:
         )
 
         order = pages.select("url", "wave", "seq").orderBy("seq")
-        seen_final = seen_parts[0]
-        for p in seen_parts[1:]:
-            seen_final = seen_final.unionByName(p)
         return CrawlResult(
-            pages=pages, links=links, seen=seen_final, order=order, metrics=metrics
+            pages=pages,
+            links=links,
+            seen=reduce(DataFrame.unionByName, seen_parts),
+            order=order,
+            metrics=metrics,
         )
 
     def rebuild_frontier_from_links(
@@ -822,14 +787,10 @@ class CrawlEngine:
             .join(crawled, F.col("url") == F.col("__crawled"), "left_anti")
         )
         cand = cand.withColumn("host", U.url_host(F.col("url")))
-        cand = self._admit(cand, base_domain)
-        wfirst = Window.partitionBy("url").orderBy("src_seq", "anchor_pos")
-        cand = (
-            cand.withColumn("__rn", F.row_number().over(wfirst))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        cand = _first_discovery(self._admit(cand, base_domain), "src_seq", "anchor_pos")
+        rebuilt, _ = ordered_seq_counted(
+            cand, ["src_seq", "anchor_pos"], seq_col="seq", start=next_seq
         )
-        rebuilt = ordered_seq(cand, ["src_seq", "anchor_pos"], seq_col="seq", start=next_seq)
         return rebuilt.select(
             "url",
             U.url_hash(F.col("url")).alias("url_hash"),
@@ -837,20 +798,4 @@ class CrawlEngine:
             F.lit(1).alias("depth"),  # reference: link.get('depth', 1)
             F.lit(0).alias("wave"),
             "seq",
-        )
-
-    def _snapshot(self, wave, frontier, seen, pages, links, metric,
-                  on_data_written=None):
-        from ..state.snapshots import SnapshotStore
-
-        store = SnapshotStore(self.state_dir)
-        store.commit_wave(
-            wave,
-            frontier=frontier,
-            seen=seen,
-            pages=pages,
-            links=links,
-            metric=metric,
-            base_domain=getattr(self, "_base_domain", None),
-            on_data_written=on_data_written,
         )

@@ -45,6 +45,8 @@ as an ``Observation``.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -87,10 +89,7 @@ def _edges(docs: DataFrame, n: int) -> DataFrame:
         )
         for fn, _ in _GEN_EXPRS
     ]
-    e = parts[0]
-    for p in parts[1:]:
-        e = e.unionByName(p)
-    return e.filter(F.col("src") != F.col("dst"))
+    return reduce(DataFrame.unionByName, parts).filter(F.col("src") != F.col("dst"))
 
 
 def _e2_table(e: DataFrame) -> DataFrame:

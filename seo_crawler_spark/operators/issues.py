@@ -21,6 +21,7 @@ from __future__ import annotations
 import fnmatch
 import re
 from difflib import SequenceMatcher
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -251,10 +252,9 @@ def detect_issues(pages: DataFrame, exclusion_patterns: list[str] | None = None)
                    F.lit("Links on this page are NOT followed by search engines - has nofollow directive")).alias("i"))
     )
 
-    out = issues[0]
-    for df in issues[1:]:
-        out = out.unionByName(df)
-    return out.select("i.url", "i.type", "i.category", "i.issue", "i.details")
+    return reduce(DataFrame.unionByName, issues).select(
+        "i.url", "i.type", "i.category", "i.issue", "i.details"
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,10 @@ through one task — fine at 10^3 rows, fatal at 10^8. Instead:
      rows),
   4. row_number *within* each partition (parallel windows) + offset.
 
+``ordered_seq_counted`` is the one entry point: it returns the frame
+and its row count, which step 2 yields for free. The engine's seeds,
+waves, refresh resume and queue rebuild all number rows through it.
+
 Never monotonically_increasing_id(): its values depend on partition
 layout and are not rank-stable (SURVEY.md §7 risk #1).
 """
@@ -28,7 +32,6 @@ def ordered_seq_counted(
     order_cols: list[str],
     seq_col: str = "seq",
     start: int = 0,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Assign ``seq_col`` = start + (0-based dense global rank by
     order_cols); also return the row count (known for free from the
@@ -40,9 +43,7 @@ def ordered_seq_counted(
     per discovery).
     """
     cols = [F.col(c) for c in order_cols]
-    n_shuffle = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
+    n_shuffle = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     ranged = df.repartitionByRange(int(n_shuffle), *cols).withColumn(
         "__pid", F.spark_partition_id()
     )
@@ -76,12 +77,3 @@ def ordered_seq_counted(
     )
     return out, acc - start
 
-
-def ordered_seq(
-    df: DataFrame,
-    order_cols: list[str],
-    seq_col: str = "seq",
-    start: int = 0,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    return ordered_seq_counted(df, order_cols, seq_col, start, num_partitions)[0]

@@ -108,11 +108,10 @@ def url_template(url) -> F.Column:
 def template_cap_tag(
     frontier: DataFrame,
     cap: int,
-    order_by: tuple[str, ...] = ("seq",),
     salt_buckets: int = 1,
 ) -> DataFrame:
     """Tag frontier rows with ``trap_admitted``: at most ``cap`` URLs per
-    (host, URL template) admitted per wave, earliest-``order_by`` first —
+    (host, URL template) admitted per wave, earliest ``seq`` first —
     the frontier-side defense against crawl traps (see
     plans/crawl_queries.crawl_trap_detection for the analytics twin).
 
@@ -131,10 +130,10 @@ def template_cap_tag(
     if salt_buckets > 1:
         salt = F.pmod(F.col("url_hash"), F.lit(salt_buckets))
         per_salt_cap = -(-cap // salt_buckets)  # ceil(cap/k)
-        w = Window.partitionBy("host", tpl, salt).orderBy(*order_by)
+        w = Window.partitionBy("host", tpl, salt).orderBy("seq")
     else:
         per_salt_cap = cap
-        w = Window.partitionBy("host", tpl).orderBy(*order_by)
+        w = Window.partitionBy("host", tpl).orderBy("seq")
     return (
         frontier.withColumn("__trnk", F.row_number().over(w))
         .withColumn("trap_admitted", F.col("__trnk") <= per_salt_cap)

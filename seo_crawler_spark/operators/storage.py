@@ -37,6 +37,8 @@ the Spark build's physical-layout layer (SURVEY §7 scale notes).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -151,10 +153,7 @@ def storage_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("row")
             ).select("row.*")
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("layout", "column_name")
+    return reduce(DataFrame.unionByName, parts).orderBy("layout", "column_name")
 
 
 def storage_layout_sql() -> str:
@@ -316,10 +315,7 @@ def pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("row")
             ).select("row.*")
         )
-    out = out_parts[0]
-    for p in out_parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("layout", "predicate")
+    return reduce(DataFrame.unionByName, out_parts).orderBy("layout", "predicate")
 
 
 def pruning_audit_sql() -> str:

@@ -69,11 +69,11 @@ _COLS = [f.name for f in FETCH_RESULT_SCHEMA.fields]
 
 
 class StaticCorpusFetcher:
-    """The engine's default behavior, expressed through the connector:
-    'fetching' resolves against a pre-materialized corpus table. Used
-    for replays, regression fixtures, and this sandbox's synthetic
-    web; also the shape of a warehouse-backed re-crawl (corpus = the
-    previous crawl's pages)."""
+    """The engine's default fetcher: a ``CrawlEngine`` built without a
+    fetcher wraps its corpus in one, so 'fetching' resolves against a
+    pre-materialized corpus table. Used for replays, regression
+    fixtures, and the synthetic web; also the shape of a
+    warehouse-backed re-crawl (corpus = the previous crawl's pages)."""
 
     def __init__(self, corpus: DataFrame):
         self.corpus = corpus.select(*_COLS)

@@ -31,12 +31,3 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
-
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register all tables as temp views for spark.sql() use."""
-    for t in TABLES:
-        load(spark, t, sf_dir).createOrReplaceTempView(t)

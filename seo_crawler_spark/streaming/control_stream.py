@@ -12,7 +12,9 @@ monitor needs. Exactly-once follows the versioned-state discipline
 (snapshots.py convention): batch k writes merge(v_{k-1}, batch_k) to
 a fresh ``v<k>`` dir via staged write + atomic rename; a RETRIED
 batch recomputes from v_{k-1} and overwrites only its own version, so
-the non-idempotent sum is never double-applied.
+the non-idempotent sum is never double-applied. The arrival staging and
+the fold are ``streaming/versioned.py``'s, shared with the other
+streaming twins.
 
 The chart (EWMA + squared-integer control limits) then runs over the
 final merged day table via the batch operator's own
@@ -24,8 +26,6 @@ hll_distinct_stream / dedup_incremental_stream gate).
 
 from __future__ import annotations
 
-import glob
-import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,86 +33,21 @@ from pyspark.sql import functions as F
 
 from ..operators.events_analytics import chart_from_daily, daily_counts
 from ..sources.tables import load
-
-
-def _stage_batches(
-    spark: SparkSession, ev: DataFrame, input_dir: str, n_files: int
-) -> None:
-    """Stage events as ``n_files`` single-file parquets in ascending
-    event_id ranges with ascending mtimes (deterministic arrival
-    order). Harness helper — production feeds the landing dir."""
-    ids = [r["event_id"] for r in ev.select("event_id").orderBy("event_id").collect()]
-    os.makedirs(input_dir, exist_ok=True)
-    per = max(1, -(-len(ids) // n_files))
-    for i in range(n_files):
-        chunk = ids[i * per : (i + 1) * per]
-        if not chunk:
-            break
-        stage = f"{input_dir}/_stage{i}"
-        ev.filter(
-            (F.col("event_id") >= chunk[0]) & (F.col("event_id") <= chunk[-1])
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{input_dir}/batch_{i:04d}.parquet"
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-
-def _latest_version(
-    state_dir: str, before: int | None = None
-) -> tuple[int, str | None]:
-    """Largest committed version, optionally restricted to versions
-    STRICTLY BELOW ``before``. A retried batch k must fold over
-    v_{k-1}, not the global latest: after a crash between the v_k
-    rename and the stream checkpoint commit, the global latest IS v_k,
-    and folding batch k's non-idempotent SUM over it would
-    double-apply the batch (round-4 ADVICE, medium)."""
-    vs = sorted(glob.glob(f"{state_dir}/v*"))
-    if before is not None:
-        vs = [v for v in vs if int(os.path.basename(v)[1:]) < before]
-    if not vs:
-        return -1, None
-    last = vs[-1]
-    return int(os.path.basename(last)[1:]), last
+from .versioned import _latest_version, _stage_batches, stream_fold
 
 
 def stream_daily_counts(
     spark: SparkSession, input_dir: str, schema, state_dir: str
 ) -> None:
     """availableNow stream: per micro-batch, fold the batch's per-day
-    partial counts into the versioned day-table state by SUM."""
-    os.makedirs(state_dir, exist_ok=True)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = daily_counts(batch_df)
-        _, prev = _latest_version(state_dir, before=batch_id)
-        if prev is not None:
-            prior = batch_df.sparkSession.read.parquet(prev)
-            part = (
-                prior.unionByName(part)
-                .groupBy("day")
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.sum("n_err").alias("n_err"),
-                )
-            )
-        stage = f"{state_dir}/_stage_v{batch_id}"
-        part.coalesce(1).write.mode("overwrite").parquet(stage)
-        final = f"{state_dir}/v{batch_id:06d}"
-        if os.path.exists(final):  # retried batch replaces its attempt
-            shutil.rmtree(final)
-        os.rename(stage, final)
-
-    (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{state_dir}/_ckpt")
-        .start()
-        .awaitTermination()
+    partial counts into the versioned day-table state by SUM
+    (``versioned.stream_fold``)."""
+    stream_fold(
+        spark, input_dir, schema, state_dir,
+        partial=daily_counts,
+        merge=lambda u: u.groupBy("day").agg(
+            F.sum("n").alias("n"), F.sum("n_err").alias("n_err")
+        ),
     )
 
 
@@ -135,7 +70,7 @@ def error_rate_control_stream(
     work = tempfile.mkdtemp(prefix="ctl_stream_")
     try:
         input_dir, state_dir = f"{work}/in", f"{work}/state"
-        _stage_batches(spark, ev, input_dir, n_batches)
+        _stage_batches(spark, ev, input_dir, n_batches, key="event_id")
         stream_daily_counts(spark, input_dir, ev.schema, state_dir)
         _, final = _latest_version(state_dir)
         counts = spark.read.parquet(final)

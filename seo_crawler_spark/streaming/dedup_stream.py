@@ -28,7 +28,9 @@ overwrites its own partial output instead of duplicating it, and state
 reads filter ``batch < current`` so a retry never sees its failed
 attempt's partial state. Arrival order IS the semantics (keep-first):
 the earliest arrival of a near-dup group is the one kept, matching the
-batch operator when arrivals are doc_id-ordered.
+batch operator when arrivals are doc_id-ordered, as
+``streaming/versioned.py``'s ``_stage_batches`` (shared with the other
+streaming twins) stages them.
 
 Parity is pinned two ways: tests/test_streaming_dedup.py asserts
 streamed verdicts ≡ ``dedup_incremental`` row-for-row, and the
@@ -48,6 +50,7 @@ from pyspark.sql import functions as F
 from ..operators.dedup import DELTA_MOD, _hashed_shingles, _minhash_bands
 from ..functions.text import md5int
 from ..sources.tables import load
+from .versioned import _stage_batches
 
 
 # the band-index state is hash-partitioned on sig_bucket so each
@@ -475,38 +478,6 @@ def read_verdicts(spark: SparkSession, state_dir: str) -> DataFrame:
     )
 
 
-def _stage_delta_files(
-    spark: SparkSession, delta: DataFrame, input_dir: str, n_files: int
-) -> None:
-    """Write the delta docs as ``n_files`` single-file parquets in
-    ascending doc_id ranges with ascending mtimes — deterministic
-    arrival order for the file source (it orders by modification
-    time). Contiguous ranges make arrival order ≡ doc_id order, the
-    condition under which stream ≡ batch exactly."""
-    import glob
-    import shutil
-
-    # driver-side staging helper (test/driver harness, not a production
-    # path): the id list is the delta batch, bounded by definition
-    rows = delta.select("doc_id").orderBy("doc_id").collect()
-    ids = [r["doc_id"] for r in rows]
-    os.makedirs(input_dir, exist_ok=True)
-    per = max(1, -(-len(ids) // n_files))
-    for i in range(n_files):
-        chunk = ids[i * per : (i + 1) * per]
-        if not chunk:
-            break
-        stage = f"{input_dir}/_stage{i}"
-        delta.filter(
-            (F.col("doc_id") >= chunk[0]) & (F.col("doc_id") <= chunk[-1])
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{input_dir}/{i:03d}.parquet"
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-
-
 def dedup_incremental_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -530,7 +501,7 @@ def dedup_incremental_stream(
         state_dir, input_dir = f"{work}/state", f"{work}/in"
         prepare_dedup_base(docs.filter(~is_delta), state_dir)
         delta = docs.filter(is_delta)
-        _stage_delta_files(spark, delta, input_dir, n_batches)
+        _stage_batches(spark, delta, input_dir, n_batches, key="doc_id")
         # compact_every=2 on purpose: the oracle hash-match then covers
         # the compaction path (batch 2 runs against a folded base), not
         # just the append path

@@ -14,7 +14,8 @@ max(state, batch). Exactly-once therefore needs only the versioned-
 state discipline: batch k writes merge(v_{k-1}, batch_k) to a fresh
 ``v<k>`` dir (staged + atomic rename, the snapshots.py convention);
 a retry of batch k recomputes from v_{k-1} and overwrites its own
-version, never double-counting.
+version, never double-counting. The arrival staging and the fold are
+``streaming/versioned.py``'s, shared with the other streaming twins.
 
 Because the merged registers are bit-identical to the batch operator's
 (same hash, same rank CASE chain, same max), the registered query
@@ -25,8 +26,6 @@ dedup_incremental_stream pattern.
 
 from __future__ import annotations
 
-import glob
-import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,40 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.sketches import hll_exact, hll_finalize, hll_registers
 from ..sources.tables import load
-
-
-def _stage_batches(
-    spark: SparkSession, docs: DataFrame, input_dir: str, n_files: int
-) -> None:
-    """Stage the documents as ``n_files`` single-file parquets in
-    ascending doc_id ranges with ascending mtimes (deterministic
-    arrival order for the file source). Driver-side test/harness
-    helper — production feeds the real landing dir."""
-    rows = docs.select("doc_id").orderBy("doc_id").collect()
-    ids = [r["doc_id"] for r in rows]
-    os.makedirs(input_dir, exist_ok=True)
-    per = max(1, -(-len(ids) // n_files))
-    for i in range(n_files):
-        chunk = ids[i * per : (i + 1) * per]
-        if not chunk:
-            break
-        stage = f"{input_dir}/_stage{i}"
-        docs.filter(
-            (F.col("doc_id") >= chunk[0]) & (F.col("doc_id") <= chunk[-1])
-        ).coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{input_dir}/batch_{i:04d}.parquet"
-        shutil.move(part, dst)
-        shutil.rmtree(stage)
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-
-
-def _latest_version(state_dir: str) -> tuple[int, str | None]:
-    vs = sorted(glob.glob(f"{state_dir}/v*"))
-    if not vs:
-        return -1, None
-    last = vs[-1]
-    return int(os.path.basename(last)[1:]), last
+from .versioned import _latest_version, _stage_batches, stream_fold
 
 
 def stream_hll(
@@ -78,38 +44,11 @@ def stream_hll(
 ) -> None:
     """Run the availableNow stream: per micro-batch, build the batch's
     register table and fold it into the versioned state by register
-    max. State write is staged + atomically renamed to ``v<batch>``;
-    a retried batch overwrites its own version (idempotent max)."""
-    os.makedirs(state_dir, exist_ok=True)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        regs = hll_registers(batch_df)
-        _, prev = _latest_version(state_dir)
-        if prev is not None:
-            prior = batch_df.sparkSession.read.parquet(prev)
-            regs = (
-                prior.unionByName(regs)
-                .groupBy("source", "j")
-                .agg(F.max("m").alias("m"))
-            )
-        stage = f"{state_dir}/_stage_v{batch_id}"
-        regs.coalesce(1).write.mode("overwrite").parquet(stage)
-        final = f"{state_dir}/v{batch_id:06d}"
-        if os.path.exists(final):  # retried batch: replace its attempt
-            shutil.rmtree(final)
-        os.rename(stage, final)
-
-    (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", f"{state_dir}/_ckpt"
-        )
-        .start()
-        .awaitTermination()
+    max (``versioned.stream_fold``)."""
+    stream_fold(
+        spark, input_dir, schema, state_dir,
+        partial=hll_registers,
+        merge=lambda u: u.groupBy("source", "j").agg(F.max("m").alias("m")),
     )
 
 
@@ -130,7 +69,7 @@ def hll_distinct_stream(
     work = tempfile.mkdtemp(prefix="hll_stream_")
     try:
         input_dir, state_dir = f"{work}/in", f"{work}/state"
-        _stage_batches(spark, docs, input_dir, n_batches)
+        _stage_batches(spark, docs, input_dir, n_batches, key="doc_id")
         stream_hll(spark, input_dir, docs.schema, state_dir)
         _, final = _latest_version(state_dir)
         regs = spark.read.parquet(final)

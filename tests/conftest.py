@@ -8,9 +8,6 @@ SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
 
 
-import os
-
-
 # Measured per-file suite seconds (full run, local[8] spark fixture,
 # this host) — the cost model for --shard's greedy file assignment.
 # Files not listed cost 1.5 s per collected test. Re-measure with
@@ -114,19 +111,6 @@ def spark():
     # local[8]/shuffle=4: engine waves are dozens of tiny jobs — more
     # concurrent tasks and fewer shuffle partitions both cut the
     # per-job constant that dominates the suite's wall time.
-    # SPARK_TEST_* env knobs allow A/B-ing the constants without edits.
-    extra = {}
-    if os.environ.get("SPARK_TEST_AQE") == "off":
-        extra["spark.sql.adaptive.enabled"] = "false"
-    if os.environ.get("SPARK_TEST_NO_CONSTRAINTS") == "1":
-        # constraint propagation is quadratic-ish in plan depth and is
-        # a known driver-CPU sink on iterative per-wave-unique plans
-        extra["spark.sql.constraintPropagation.enabled"] = "false"
-    s = get_spark(
-        "tests",
-        master=f"local[{os.environ.get('SPARK_TEST_CPUS', '8')}]",
-        shuffle_partitions=int(os.environ.get("SPARK_TEST_SHUFFLE", "4")),
-        extra_conf=extra or None,
-    )
+    s = get_spark("tests", master="local[8]", shuffle_partitions=4)
     yield s
     s.stop()

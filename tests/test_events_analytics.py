@@ -363,10 +363,10 @@ def test_control_stream_equals_batch_and_retry_is_idempotent(spark, tmp_path):
         error_rate_control,
     )
     from seo_crawler_spark.streaming.control_stream import (
-        _latest_version,
         error_rate_control_stream,
         stream_daily_counts,
     )
+    from seo_crawler_spark.streaming.versioned import _latest_version
 
     batch = error_rate_control(spark, SF0001).collect()
     stream = error_rate_control_stream(spark, SF0001).collect()
@@ -390,7 +390,7 @@ def test_control_stream_equals_batch_and_retry_is_idempotent(spark, tmp_path):
         F.col("ts").cast("timestamp").cast("double").alias("e"),
     )
     work = str(tmp_path / "ctl")
-    from seo_crawler_spark.streaming.control_stream import _stage_batches
+    from seo_crawler_spark.streaming.versioned import _stage_batches
 
     _stage_batches(spark, ev, f"{work}/in", 3)
     stream_daily_counts(spark, f"{work}/in", ev.schema, f"{work}/state")
@@ -493,10 +493,8 @@ def test_control_stream_retry_after_rename_does_not_double_apply(
     from pyspark.sql import functions as F
 
     from seo_crawler_spark.sources.tables import load
-    from seo_crawler_spark.streaming.control_stream import (
-        _stage_batches,
-        stream_daily_counts,
-    )
+    from seo_crawler_spark.streaming.control_stream import stream_daily_counts
+    from seo_crawler_spark.streaming.versioned import _stage_batches
 
     ev = load(spark, "events", SF0001).select(
         "event_id",

@@ -18,6 +18,9 @@ from seo_crawler_spark.sources.corpus import (
 )
 
 N_DOCS, N_HOSTS = 300, 5
+# jobs a steady wave of test_steady_waves_compile_no_classes submits,
+# measured with that test on the engine before its one-wave-path cleanup
+STEADY_WAVE_JOBS = 26
 
 
 @pytest.fixture(scope="module")
@@ -169,20 +172,35 @@ def test_steady_waves_compile_no_classes(spark, corpus_df, robots_df, tmp_path):
     schedule from a deferred ∪ new frontier; from then on each wave has
     the same plan shape. Counted between control polls, so the snapshot
     commit is included, and checked against the ``codegen_compiles``
-    each wave's metric records and persists."""
+    each wave's metric records and persists. The same steady waves also
+    submit a fixed number of Spark jobs, read per wave through a job
+    group set at each poll (snapshot writes inherit it)."""
     from seo_crawler_spark.metrics import codegen_compiles
     from seo_crawler_spark.state.snapshots import SnapshotStore
 
+    sc = spark.sparkContext
     polls: list[int] = []
     state = str(tmp_path / "state")
     cfg = CrawlConfig(
         max_depth=3, max_urls=10_000, politeness_budget=1, wave_seconds=1.0,
         max_waves=6,
     )
+
+    def control():
+        sc.setJobGroup(f"wave-{len(polls)}", "steady-wave job count")
+        polls.append(codegen_compiles(spark))
+
     engine = CrawlEngine(spark, corpus_df, robots_df, cfg, state_dir=state)
-    engine.control = lambda: polls.append(codegen_compiles(spark))
-    res = engine.run(seed_urls(N_HOSTS))
+    engine.control = control
+    try:
+        res = engine.run(seed_urls(N_HOSTS))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     polls.append(codegen_compiles(spark))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(f"wave-{k}")) for k in range(6)]
+    assert len(set(jobs[3:])) == 1 and jobs[3] <= STEADY_WAVE_JOBS, jobs
 
     per_wave = [b - a for a, b in zip(polls, polls[1:])]
     assert len(res.metrics) == len(per_wave) == 6, per_wave

@@ -220,10 +220,8 @@ def test_hll_stream_state_stays_constant_size(spark):
     import glob
 
     from seo_crawler_spark.operators.sketches import HLL_M
-    from seo_crawler_spark.streaming.sketch_stream import (
-        _stage_batches,
-        stream_hll,
-    )
+    from seo_crawler_spark.streaming.sketch_stream import stream_hll
+    from seo_crawler_spark.streaming.versioned import _stage_batches
     from seo_crawler_spark.sources.tables import load
 
     import tempfile

@@ -11,11 +11,13 @@ from seo_crawler_spark.functions.text import md5int
 from seo_crawler_spark.operators.dedup import DELTA_MOD, dedup_incremental
 from seo_crawler_spark.sources.tables import load
 from seo_crawler_spark.streaming.dedup_stream import (
-    _stage_delta_files,
     dedup_incremental_stream,
     prepare_dedup_base,
     read_verdicts,
     stream_dedup_incremental,
+)
+from seo_crawler_spark.streaming.versioned import (
+    _stage_batches as _stage_delta_files,
 )
 
 SF = "/root/testdata/sf0.001"
